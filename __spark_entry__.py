@@ -52,8 +52,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # across rounds; the rotated-out tail is evidenced in CORRECTNESS_r04.json
 # (regenerated full 57-row run) and r03.
 _FIRST = [
-    "semantic_dedup", "image_curation", "link_pagerank", "scrape_tables",
-    "lang_id", "similarity_lsh_bucketed", "multimodal_extract",
+    "semantic_dedup", "image_curation", "scrape_tables", "lang_id",
+    "similarity_lsh_bucketed", "multimodal_extract",
 ]
 
 

@@ -12,12 +12,16 @@ synthetic/   deterministic seeded web generator (pages+edges+seeds+robots)
              and the image payload codecs per BASELINE.json input_hint
 oracle/      sequential pure-Python oracle of the reference BFS semantics —
              the definition of "correct" for conformance tests (SURVEY §5.2.2)
-operators/   Spark operators: canonicalize (U1), seen-set bloom+anti-join (J1),
-             politeness window-rank dequeue (W2), link extraction (U3/X1),
-             fetch join (J4/U2), matchers (P1-P6), payload validation (U4/X5),
-             dedup / similarity / textstats (training-data pipeline ops)
+operators/   the crawl's Spark operators: canonicalize (U1), seen-set
+             bloom+anti-join (J1), politeness window-rank dequeue (W2), link
+             extraction (U3/X1), fused fetch (J4/U2), matchers (P1-P6),
+             payload validation (U4/X5), robots (live mode), the X4
+             table scrape of the reference's tianalyser, and the
+             training-data pipeline ops (dedup / similarity / textstats /
+             multimodal / temporal) behind the query registry
 functions/   scalar helpers: URL column functions, retry backoff policies
-plans/       report/aggregate queries (A3-A7) — the flagship query shapes
+plans/       report/aggregate queries (A3-A7) and the operator query
+             registry with DuckDB twins (``generic_queries.QUERIES``)
 streaming/   the micro-batch round loop + checkpoint/resume
 storage.py   table catalog: parquet snapshot layout (Iceberg-ready interface)
 """

@@ -454,63 +454,3 @@ def phash_neardup_pairs(images: DataFrame, id_col: str = "image_id",
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-
-
-def duplicate_span_stats(docs: DataFrame, span_len: int = 8,
-                         min_docs: int = 2, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
-    """Exact duplicate-SPAN detection (substring-level dedup): for every doc,
-    count how many of its ``span_len``-word sliding windows also occur in at
-    least ``min_docs`` distinct documents. This is the span-granular
-    complement of doc-level dedup (T1/T2): training-data pipelines drop or
-    down-weight documents whose text is largely made of corpus-duplicated
-    spans (Lee et al. 2022, "Deduplicating Training Data Makes Language
-    Models Better" — their suffix-array ExactSubstr at 50-token granularity;
-    here the windows are word k-grams so the oracle twin stays expressible).
-
-    Returns one row per input doc: (id, n_spans, n_dup_spans) — all longs, so
-    the DuckDB twin hash-matches exactly.
-
-    Scale shape: ONE corpus explode (plan-gated — a groupBy-then-join-back
-    formulation re-explodes the corpus on both branches, the same
-    CollapseProject trap tfidf_topk documents): occurrences reduce to
-    distinct (hash, doc) pairs with a map-side-partial count, the
-    distinct-doc count per span is a window COUNT over that already-reduced
-    relation (never the raw occurrence stream), and every shuffle key is
-    the 60-bit span hash, not the span string. No Python anywhere.
-    """
-    from pyspark.sql import Window
-
-    ell = int(span_len)
-    w = docs.select(
-        F.col(id_col), normalized_words(F.col(text_col)).alias("_words")
-    )
-    spans_arr = F.when(
-        F.size("_words") >= ell,
-        F.expr(
-            f"transform(sequence(1, size(_words) - {ell - 1}),"
-            f" i -> array_join(slice(_words, i, {ell}), ' '))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    sp = w.select(F.col(id_col), F.explode(spans_arr).alias("span")).select(
-        F.col(id_col), hash64(F.col("span")).alias("h")
-    )
-    # (h, doc, occ): one row per span-per-doc — the corpus is never
-    # re-scanned; _nd rides in as a window count over the reduced relation
-    g = sp.groupBy("h", id_col).agg(F.count("*").alias("_occ"))
-    g = g.withColumn("_nd", F.count("*").over(Window.partitionBy("h")))
-    per = g.groupBy(id_col).agg(
-        F.sum("_occ").alias("n_spans"),
-        F.sum(
-            F.when(F.col("_nd") >= min_docs, F.col("_occ")).otherwise(F.lit(0))
-        ).alias("n_dup_spans"),
-    )
-    return (
-        docs.select(id_col)
-        .join(per, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("n_spans", F.lit(0)).alias("n_spans"),
-            F.coalesce("n_dup_spans", F.lit(0)).alias("n_dup_spans"),
-        )
-    )

@@ -2,22 +2,19 @@
 
 Reference ``DefaultLinkExtractor`` (linkextractor.go:19-66): find ``<a href>``
 attributes, resolve against the current URL, drop blacklisted hosts,
-deduplicate, sort. Re-expressed as one Arrow-batched pandas UDF returning
-``array<string>`` — HTML parse stays in Python (the one place it must), the
-explode/fan-out stays JVM-side.
+deduplicate, sort. Runs per row inside the fused fetch pass
+(``fetch.fetch_process``), which returns the links as ``array<string>`` —
+HTML parse stays in Python (the one place it must), the explode/fan-out
+stays JVM-side.
 
 The regex href scan matches the generator's output and any well-formed
 ``<a ... href="...">`` / ``href='...'`` tag; a full HTML5 parser is a drop-in
-replacement behind the same UDF signature (X2 plug-point).
+replacement behind the same extractor signature (X2 plug-point).
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql import functions as F  # noqa: N812
-from pyspark.sql import types as T  # noqa: N812
 
 from ..functions.urlfuncs import canonicalize_url, split_canonical
 
@@ -96,16 +93,3 @@ def make_scoped_extractor(
         return sorted(out)
 
     return extract
-
-
-def make_extract_udf(blacklist: frozenset[str]):
-    """Build the extractor UDF with the blacklist captured in the closure
-    (ships to executors once per stage via task serialization)."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def extract_links(url: pd.Series, body: pd.Series) -> pd.Series:
-        return pd.Series(
-            [extract_links_py(u, b, blacklist) for u, b in zip(url, body)]
-        )
-
-    return extract_links

@@ -127,6 +127,14 @@ def fetch_process(
     joined = dequeued.join(pruned, "url", "left").withColumn(
         "found", F.col("status").isNotNull()
     )
+    if validate:
+        # phash crosses as a decimal string: Arrow→pandas turns a nullable
+        # int64 column into float64 whenever a batch mixes fetch misses
+        # (null) with hits, which rounds a 64-bit hash; a string keeps it
+        # exact and misses stay None. Cast after the join: a cast in the
+        # pages projection raises that side's size estimate and can flip
+        # the join from broadcast to sort-merge.
+        joined = joined.withColumn("phash", F.col("phash").cast("string"))
     ok = F.col("found") & (matcher if matcher is not None else F.lit(True))
     joined = joined.withColumn(
         "outcome",

@@ -1,9 +1,9 @@
-"""J1 — the URL-seen set: broadcast bloom pre-filter + exact anti-join.
+"""J1 — the URL-seen set: bloom pre-filter + exact anti-join.
 
 Reference: the load-bearing ``VisitedPageInfo`` membership probes
 (crawler.go:74-79, 97-102). Two tiers (SURVEY.md §2.3 J1):
 
-tier 1  broadcast bloom filter over url_sha1 (int64) — kills shuffle volume:
+tier 1  bloom filter over url_sha1 (int64) — kills shuffle volume:
         candidates the bloom rejects are *definitely unseen* and skip the
         anti-join entirely; only maybe-seen rows shuffle.
 tier 2  exact ``left_anti`` join on the url string against the seen table —
@@ -12,32 +12,27 @@ tier 2  exact ``left_anti`` join on the url string against the seen table —
 
 The bloom is SEGMENTED: key ``h`` lives entirely inside segment ``pmod(h, S)``,
 whose bit array is an independent ``m_seg``-bit bloom. That makes the
-per-round build a *Spark job*, not a driver loop:
+per-round build one Spark action, not a driver loop (``build_round_state``):
 
     fetched Δ ──repartition(S, pmod(url_sha1, S))──► mapInPandas builds each
-    segment's bitmap where its rows live ──► driver collects S segment rows
-    (m bits total — NOT n data rows) and ORs them into the running filter.
+    segment's bitmap where its rows live ──► ≤ S (seg, bitmap, n_rows) rows
 
-Driver traffic per round is therefore O(filter size), independent of row
-count — the previous design collected every (url_sha1, depth, outcome) row
-into pandas, a multi-GB pull and a serial Amdahl fraction at 10^8-row rounds
-(measured: 8→32-core efficiency 0.361 vs a 1.017 machine ceiling).
+Driver traffic per round is O(filter size), independent of row count.
+Where those segment rows go picks the probe tier behind ``filter_unseen``:
 
-Two probe tiers exist behind ``filter_unseen``:
-
-broadcast  (small/medium filters — the engine's "auto" mode resolves here
-           below a 256 MB filter) the driver ORs the segment deltas
-           into one bit array and broadcasts it; probing is a vectorized
-           pandas UDF. Broadcast volume = filter size per round — fine up to
-           a few hundred MB, pathological at north_rule scale (10^10 URLs at
-           fpr 1e-3 ≈ 17 GB).
-partitioned  (scale path) each round's segment rows are *written* as a
-           ``bloom_segments`` per-round delta table instead of collected; the
-           probe routes candidates by ``pmod(url_sha1, S)`` and cogroups them
-           with the segment bitmaps (``probe_with_segments``) — the bit array
-           never exists in driver memory and never crosses the driver at all.
-           Driver memory and broadcast volume are O(1) in visited-set size;
-           resume needs no bloom rebuild because the segment table persists.
+broadcast  (the engine's "auto" mode resolves here below a 256 MB filter)
+           the driver collects the segment rows, ORs them into one bit array
+           and broadcasts it; probing is a vectorized pandas UDF. Broadcast
+           volume = filter size per probing round — fine up to a few hundred
+           MB, pathological at north_rule scale (10^10 URLs at fpr 1e-3 ≈
+           17 GB). Resume rebuilds the array from the fetched table
+           (``build_bloom_distributed``).
+partitioned  (scale path) the segment rows are *written* as a
+           ``bloom_segments`` per-round delta table; the probe routes
+           candidates by ``pmod(url_sha1, S)`` and cogroups them with the
+           segment bitmaps (``probe_with_segments``) — the bit array never
+           exists in driver memory and never crosses the driver at all.
+           Resume needs no rebuild because the segment table persists.
 """
 
 from __future__ import annotations
@@ -124,8 +119,8 @@ class Bloom:
         self.n_added += n_rows
 
     def add(self, hashes: np.ndarray) -> None:
-        """Driver-side add (tests / tiny deltas); the engine path is
-        ``build_round_state`` → ``or_segment``."""
+        """Driver-side add — the reference build tests compare against; the
+        engine path is ``build_round_state`` → ``or_segment``."""
         h = np.asarray(hashes)
         if len(h) == 0:
             return
@@ -152,132 +147,63 @@ class Bloom:
         return res
 
 
-_STATE_SCHEMA = (
-    "seg int, bitmap binary, n_rows long, outcome string, min_depth long"
-)
+_STATE_SCHEMA = "seg int, bitmap binary, n_rows long"
 
 
 def build_round_state(df: DataFrame, bloom: Bloom,
-                      build_bloom: bool = True,
-                      segments_sink: tuple | None = None) -> tuple[dict, int | None]:
-    """ONE Spark job that replaces the old full-result ``toPandas``: routes
-    the round's (url_sha1, depth, outcome) by bloom segment, builds each
-    segment's bitmap delta executor-side, and returns the per-outcome counts
-    and min depth. Mutates ``bloom`` by OR-merging the segment deltas.
+                      segments_sink: tuple | None = None) -> None:
+    """ONE Spark action that adds every ``url_sha1`` in ``df`` to the filter:
+    routes the sha1s by bloom segment and builds each segment's bitmap
+    delta executor-side, one ``(seg, bitmap, n_rows)`` row per segment.
 
-    Collected rows: ≤ S segment rows (bloom-sized) + ≤ S·|outcomes| stat rows
-    — independent of the round's row count.
+    Broadcast mode (no sink): the driver collects the ≤ S segment rows
+    (bloom-sized, independent of the round's row count) and OR-merges them
+    into ``bloom``; ``n_rows`` keeps ``bloom.n_added`` exact.
 
     ``segments_sink=(catalog, round_id)`` is the partitioned-probe scale
-    path: the segment bitmap rows are WRITTEN to the catalog's
-    ``bloom_segments`` delta table straight from the executors — the driver
-    reads back only the (narrow, bitmap-column-pruned) stat rows, so driver
-    traffic is O(S) stat rows and the bit arrays never reach it. The driver
-    ``bloom`` object is left untouched in this mode.
-
-    ``build_bloom=False`` (caller proved no future round will probe the
-    filter — frontier min-depth is monotone, so once min+1 exceeds the depth
-    cap it stays exceeded) skips the repartition + Python segment build and
-    computes the stats as a pure JVM aggregate.
+    path: the segment rows are WRITTEN to the catalog's ``bloom_segments``
+    delta table straight from the executors, so the bit arrays never reach
+    the driver and the driver ``bloom`` object is left untouched.
     """
-    if not build_bloom:
-        counts: dict[str, int] = {}
-        min_depth: int | None = None
-        for r in (
-            df.groupBy("outcome")
-            .agg(F.count("*").alias("n"), F.min("depth").alias("d"))
-            .collect()
-        ):
-            counts[r["outcome"]] = int(r["n"])
-            d = int(r["d"])
-            min_depth = d if min_depth is None else min(min_depth, d)
-        return counts, min_depth
-
     s, m_seg, k = bloom.s, int(bloom.m_seg), bloom.k
-    has_stats = "depth" in df.columns
-    cols = ["url_sha1", "depth", "outcome"] if has_stats else ["url_sha1"]
-    routed = df.select(*cols).repartition(s, F.pmod(F.col("url_sha1"), F.lit(s)))
+    routed = df.select("url_sha1").repartition(
+        s, F.pmod(F.col("url_sha1"), F.lit(s))
+    )
 
     def build(batches):
         acc: dict[int, np.ndarray] = {}
-        counts: dict[str, int] = {}
-        min_depth = None
+        n: dict[int, int] = {}
         for pdf in batches:
             h = pdf["url_sha1"].to_numpy(dtype=np.int64)
             segs = _segment_of(h, s)
             for seg in np.unique(segs):
-                bm = _build_segment_bitmap(h[segs == seg], m_seg, k)
-                if int(seg) in acc:
-                    acc[int(seg)] |= bm
+                hs = h[segs == seg]
+                bm = _build_segment_bitmap(hs, m_seg, k)
+                seg = int(seg)
+                if seg in acc:
+                    acc[seg] |= bm
                 else:
-                    acc[int(seg)] = bm
-            if has_stats and len(pdf):
-                for o, n in pdf["outcome"].value_counts().items():
-                    counts[o] = counts.get(o, 0) + int(n)
-                d = int(pdf["depth"].min())
-                min_depth = d if min_depth is None else min(min_depth, d)
-        out = {"seg": [], "bitmap": [], "n_rows": [], "outcome": [],
-               "min_depth": []}
-        for seg, bm in acc.items():
-            out["seg"].append(seg)
-            out["bitmap"].append(bm.tobytes())
-            out["n_rows"].append(0)
-            out["outcome"].append(None)
-            out["min_depth"].append(None)
-        for o, n in counts.items():
-            out["seg"].append(None)
-            out["bitmap"].append(None)
-            out["n_rows"].append(n)
-            out["outcome"].append(o)
-            out["min_depth"].append(min_depth)
-        yield pd.DataFrame(out)
+                    acc[seg] = bm
+                n[seg] = n.get(seg, 0) + len(hs)
+        yield pd.DataFrame({
+            "seg": list(acc),
+            "bitmap": [bm.tobytes() for bm in acc.values()],
+            "n_rows": [n[seg] for seg in acc],
+        })
 
     state = routed.mapInPandas(build, schema=_STATE_SCHEMA)
-    counts: dict[str, int] = {}
-    min_depth: int | None = None
-
     if segments_sink is not None:
-        # scale path: bitmaps go executor→parquet, never through the driver;
-        # the stat read prunes the bitmap column and pushes seg IS NULL down
         catalog, round_id = segments_sink
         catalog.write(state, "bloom_segments", round_id)
-        stat_rows = (
-            catalog.read("bloom_segments", round_id)
-            .filter(F.col("seg").isNull())
-            .select("n_rows", "outcome", "min_depth")
-            .collect()
-        )
-        for r in stat_rows:
-            counts[r["outcome"]] = counts.get(r["outcome"], 0) + int(r["n_rows"])
-            if r["min_depth"] is not None:
-                d = int(r["min_depth"])
-                min_depth = d if min_depth is None else min(min_depth, d)
-        return counts, min_depth
-
-    seg_rows = 0
+        return
     for r in state.collect():
-        if r["seg"] is not None:
-            bloom.or_segment(int(r["seg"]), r["bitmap"], 0)
-            seg_rows += 1
-        else:
-            counts[r["outcome"]] = counts.get(r["outcome"], 0) + int(r["n_rows"])
-            if r["min_depth"] is not None:
-                d = int(r["min_depth"])
-                min_depth = d if min_depth is None else min(min_depth, d)
-    bloom.n_added += sum(counts.values()) if has_stats else 0
-    return counts, min_depth
+        bloom.or_segment(int(r["seg"]), r["bitmap"], int(r["n_rows"]))
 
 
 def build_bloom_distributed(df: DataFrame, bloom: Bloom) -> None:
-    """Bloom-only variant (resume path): add every url_sha1 in ``df`` via the
-    executor-side segment build. Marks the filter non-empty even when counts
-    are unknown."""
-    n_before = bloom.n_added
-    build_round_state(df.select("url_sha1"), bloom)
-    if bloom.n_added == n_before:
-        # stats-less build: approximate n_added with a cheap count so the
-        # probe path knows the filter is live
-        bloom.n_added += df.count()
+    """Resume path: rebuild the broadcast filter from every ``url_sha1`` in
+    ``df`` with the same executor-side segment build as the round path."""
+    build_round_state(df, bloom)
 
 
 def probe_with_segments(
@@ -326,6 +252,8 @@ def probe_with_segments(
         "_salt", F.pmod(F.xxhash64(F.col("url_sha1")), F.lit(probe_salt)).cast("int")
     )
     segs = (
+        # checkpoints written before the stats columns went carry stat rows
+        # with a null seg alongside the bitmap rows
         segments.filter(F.col("seg").isNotNull())
         .select(F.col("seg").cast("int").alias("_seg"), "bitmap")
         .withColumn(
@@ -392,9 +320,8 @@ def filter_unseen(
     elif bloom is None or bloom.n_added == 0:
         return candidates.join(seen.select("url"), "url", "left_anti"), candidates.limit(0)
     else:
-        # duck-typed broadcast tier: any filter exposing might_contain over
-        # int64 sha1s rides here — Bloom or the deletable CuckooFilter
-        # (operators/cuckoo.py). One broadcast per probing round either way.
+        # broadcast tier: one broadcast of the driver bit array per probing
+        # round
         state = spark.sparkContext.broadcast(bloom)
 
         @F.pandas_udf("boolean")

@@ -1,8 +1,8 @@
 """U4/X5 — image payload decode + validation (BASELINE.json input_hint).
 
-Per-row invariants, all recomputed inside one Arrow batch pass
-(``mapInPandas``) with no side tables — ground truth regenerates from
-(seed, url) via webgen:
+Per-row invariants, checked by ``_validate_row`` inside the fused fetch pass
+(``fetch.fetch_process(validate=True)``) with no side tables — ground truth
+regenerates from (seed, url) via webgen:
 
 * decode ``bytes`` per ``fmt``; lossless (png) must equal the reference
   pixels exactly; lossy must be allclose with PSNR ≥ 40 dB
@@ -22,37 +22,7 @@ from pyspark.sql import functions as F  # noqa: N812
 from ..synthetic.imagecodec import decode_image, phash64, psnr
 from ..synthetic.webgen import page_caption, page_pixels
 
-VALIDATION_SCHEMA = (
-    "url string, fmt string, decode_ok boolean, psnr_db double, "
-    "phash_ok boolean, caption_ok boolean, valid boolean"
-)
-
 PSNR_GATE_DB = 40.0
-
-
-def validate_payloads(fetched_pages: DataFrame, gen_seed: int = 42) -> DataFrame:
-    """``fetched_pages`` needs (image_id, bytes, w, h, fmt, caption, phash)."""
-
-    def check(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("url", "fmt", "decode_ok", "psnr_db", "phash_ok", "caption_ok", "valid")}
-            for r in pdf.itertuples():
-                vals = _validate_row(
-                    r.image_id, bytes(r.bytes), r.w, r.h, r.fmt,
-                    r.caption, r.phash, gen_seed,
-                )
-                rows["url"].append(r.image_id)
-                rows["fmt"].append(r.fmt)
-                for k, v in zip(VALIDATION_COL_NAMES, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    cols = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-    return fetched_pages.select(*cols).mapInPandas(check, schema=VALIDATION_SCHEMA)
-
 
 VALIDATION_COL_NAMES = ("decode_ok", "psnr_db", "phash_ok", "caption_ok", "valid")
 
@@ -75,40 +45,6 @@ def _validate_row(url, payload, w, h, fmt, caption, phash, gen_seed):
         bool(caption_ok),
         bool(decode_ok and phash_ok and caption_ok),
     )
-
-
-def with_validation_columns(df, gen_seed: int = 42, url_col: str = "url"):
-    """Inline validation: appends decode_ok/psnr_db/phash_ok/caption_ok/valid
-    to a batch that carries the payload columns (fetch.PAYLOAD_COLS); rows
-    without a payload (fetch miss) get nulls. Runs in the same Arrow pass as
-    the fetch pipeline — the payload never crosses an extra shuffle."""
-    import pandas as pd
-
-    in_schema = df.schema.simpleString()[7:-1]
-    out_schema = (
-        in_schema
-        + ",decode_ok boolean,psnr_db double,phash_ok boolean,"
-        + "caption_ok boolean,valid boolean"
-    )
-
-    def run(batches):
-        for pdf in batches:
-            cols = {k: [] for k in VALIDATION_COL_NAMES}
-            for r in pdf.itertuples():
-                payload = getattr(r, "bytes")
-                if payload is None or getattr(r, "fmt") is None:
-                    for k in VALIDATION_COL_NAMES:
-                        cols[k].append(None)
-                    continue
-                vals = _validate_row(
-                    getattr(r, url_col), bytes(payload), r.w, r.h, r.fmt,
-                    r.caption, r.phash, gen_seed,
-                )
-                for k, v in zip(VALIDATION_COL_NAMES, vals):
-                    cols[k].append(v)
-            yield pdf.assign(**cols)
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 def psnr_verify_pairs(images: DataFrame, pairs: DataFrame,

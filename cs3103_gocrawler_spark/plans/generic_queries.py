@@ -798,9 +798,8 @@ FROM events GROUP BY user_id
 
 
 def q_session_window_agg(spark, sf_dir):
-    """T41 (batch face) — Spark's NATIVE session_window aggregation, the
-    same plan fragment the Structured-Streaming sessionizer runs
-    (streaming/events_stream.py: stream ≡ batch parity is pytest-gated).
+    """T41 — Spark's NATIVE session_window aggregation, the plan fragment a
+    Structured-Streaming sessionizer would run over the same events.
     Boundary semantics are half-open — a successor exactly gap later starts
     a NEW session — which is what the twin's ``>=`` boundary rule states."""
     ev = _t(spark, sf_dir, "events")
@@ -1253,185 +1252,6 @@ FROM agg
 """
 
 
-def q_curation_pipeline(spark, sf_dir):
-    """T28 — the composed end-to-end curation pipeline (VERDICT r3 task 6):
-    quality gate (T11) → repetition gate (T21) → boilerplate strip (T22) →
-    PII redaction (T23) → near-dup removal over the REDACTED corpus
-    (T26/T27) → benchmark decontamination (T25) → stratified sample (T24),
-    in one DataFrame program over one persisted scan of the corpus.
-
-    Scale shape: the documents scan materializes ONCE (persist) and every
-    stage reads the cache — asserted by a plan gate in test_plans.py. Each
-    stage keeps its individual operator's shuffle discipline (the operators
-    are the same functions the per-stage registry entries exercise); the
-    stage order is the standard corpus-curation order (cheap row-local
-    gates first, corpus-wide aggregates next, the LSH self-join over the
-    already-shrunk corpus last)."""
-    docs = _t(spark, sf_dir, "documents").persist()
-    quality_keep = (
-        textstats.quality_scores(docs)
-        .filter(F.col("quality_score") >= 0.2)
-        .select("doc_id")
-    )
-    rep_keep = (
-        textstats.repetition_stats(
-            docs, max_dup_line_frac=0.5, max_dup_word_frac=0.6,
-            max_top_word_frac=0.4,
-        )
-        .filter(F.col("keep") == 1)
-        .select("doc_id")
-    )
-    survivors = docs.join(quality_keep, "doc_id").join(rep_keep, "doc_id")
-    cleaned = textstats.boilerplate_strip(survivors)
-    redacted = textstats.pii_redact(cleaned, text_col="clean_text")
-    curated = survivors.select("doc_id", "lang", "source").join(
-        redacted.select("doc_id", "redacted_text"), "doc_id"
-    )
-    pairs = dedup.minhash_lsh_pairs(curated, text_col="redacted_text")
-    deduped = dedup.neardup_filter(curated, pairs)
-    bench = docs.filter(
-        F.pmod(dedup.hash64(F.col("doc_id").cast("string")), F.lit(20)) == 0
-    )
-    clean_ids = (
-        textstats.contamination_check(deduped, bench, text_col="redacted_text")
-        .filter(F.col("contaminated") == 0)
-        .select("doc_id")
-    )
-    final = deduped.join(clean_ids, "doc_id")
-    sampled = textstats.stratified_sample(
-        final, group_col="source", n_per_group=5
-    )
-    return sampled.select(
-        "doc_id", "lang", "source",
-        F.col("redacted_text").alias("final_text"),
-        F.col("sample_rank").cast("long").alias("sample_rank"),
-    )
-
-
-def _shingle_rows_sql(table: str, words: str) -> str:
-    """DISTINCT (doc_id, shingle) word-3-gram rows over ``table`` — the
-    shared shingling idiom, parameterized on source table/text expression."""
-    return f"""SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(CASE WHEN len(ws) >= 3
-                  THEN list_transform(range(1, len(ws) - 1),
-                       i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
-                  ELSE [array_to_string(ws, ' ')] END) AS shingle
-    FROM (SELECT doc_id, {words} AS ws FROM {table}))"""
-
-
-_WORDS_RED_SQL = (
-    "list_filter(string_split_regex(regexp_replace(lower(redacted_text),"
-    " '[^a-z0-9 ]', ' ', 'g'), ' +'), w -> w <> '')"
-)
-_CLEAN_LINES_SQL = (
-    "list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),"
-    " l -> l <> '')"
-)
-
-SQL_CURATION_PIPELINE = """
-WITH RECURSIVE
-q AS ({quality}),
-rep AS ({repetition}),
-survivors AS (
-  SELECT d.* FROM documents d
-  JOIN q USING (doc_id) JOIN rep USING (doc_id)
-  WHERE q.quality_score >= 0.2 AND rep.dup_line_frac <= 0.5
-    AND rep.dup_word_frac <= 0.6 AND rep.top_word_frac <= 0.4),
-bbase AS (SELECT doc_id, {lines} AS la FROM survivors),
-blines AS (
-  SELECT doc_id, unnest(range(1, len(la) + 1)) AS pos, unnest(la) AS line
-  FROM bbase),
-bcommon AS (SELECT line FROM blines GROUP BY line HAVING count(DISTINCT doc_id) > 2),
-bkept AS (
-  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text
-  FROM blines WHERE line NOT IN (SELECT line FROM bcommon) GROUP BY doc_id),
-pii AS (
-  SELECT b.doc_id,
-         regexp_replace(regexp_replace(regexp_replace(
-             coalesce(k.clean_text, ''),
-             '{email}', '<EMAIL>', 'g'),
-             '{ip}', '<IP>', 'g'),
-             '{phone}', '<PHONE>', 'g') AS redacted_text
-  FROM bbase b LEFT JOIN bkept k USING (doc_id)),
-curated AS (
-  SELECT s.doc_id, s.lang, s.source, p.redacted_text
-  FROM survivors s JOIN pii p USING (doc_id)),
-sh AS ({red_shingles}),
-hsh AS (SELECT doc_id, {shingle_hash} % {p} AS h FROM sh),
-sig AS (SELECT doc_id, {mh_cols} FROM hsh GROUP BY doc_id),
-banded AS ({bands}),
-cand AS (
-  SELECT DISTINCT l.doc AS doc_a, r.doc AS doc_b
-  FROM banded l JOIN banded r
-    ON l.band_id = r.band_id AND l.band_key = r.band_key AND l.doc < r.doc),
-edges AS (
-  SELECT doc_a AS u, doc_b AS v FROM cand
-  UNION
-  SELECT doc_b AS u, doc_a AS v FROM cand),
-reach(u, label) AS (
-  SELECT u, u AS label FROM (SELECT DISTINCT u FROM edges)
-  UNION
-  SELECT e.u, r.label FROM edges e JOIN reach r ON e.v = r.u),
-comp AS (SELECT u AS doc_id, min(label) AS component FROM reach GROUP BY u),
-deduped AS (
-  SELECT c.* FROM curated c
-  WHERE c.doc_id NOT IN (SELECT doc_id FROM comp WHERE doc_id <> component)),
-bench_sh AS (
-  SELECT DISTINCT shingle FROM ({bench_shingles})
-  WHERE shingle <> ''),
-ded_sh AS (
-  SELECT * FROM ({ded_shingles}) WHERE shingle <> ''),
-cagg AS (
-  SELECT d.doc_id,
-         count(s.shingle) AS n_shingles, count(b.shingle) AS n_overlap
-  FROM deduped d
-  LEFT JOIN ded_sh s USING (doc_id)
-  LEFT JOIN bench_sh b ON s.shingle = b.shingle
-  GROUP BY d.doc_id),
-clean_ids AS (
-  SELECT doc_id FROM cagg
-  WHERE round(CAST(n_overlap AS DOUBLE) / greatest(n_shingles, 1), 6) < 0.5),
-keyed AS (
-  SELECT dd.*, {id_hash} AS _h
-  FROM deduped dd JOIN clean_ids USING (doc_id)),
-ranked AS (
-  SELECT doc_id, lang, source, redacted_text AS final_text,
-         CAST(row_number() OVER (PARTITION BY source ORDER BY _h, doc_id)
-              AS BIGINT) AS sample_rank
-  FROM keyed)
-SELECT doc_id, lang, source, final_text, sample_rank
-FROM ranked WHERE sample_rank <= 5
-""".format(
-    quality=SQL_QUALITY_SCORES,
-    repetition=SQL_REPETITION_FILTER,
-    lines=_CLEAN_LINES_SQL,
-    email=textstats.PII_EMAIL_RE,
-    ip=textstats.PII_IP_RE,
-    phone=textstats.PII_PHONE_RE,
-    red_shingles=_shingle_rows_sql("curated", _WORDS_RED_SQL),
-    shingle_hash=_HASH_SQL.format(x="shingle"),
-    p=dedup.MINHASH_P,
-    mh_cols=",\n    ".join(
-        f"min(({a} * h + {b}) % {dedup.MINHASH_P}) AS mh{i}"
-        for i, (a, b) in enumerate(dedup.PERM_AB)
-    ),
-    bands="\n  UNION ALL ".join(
-        f"SELECT doc_id AS doc, {b} AS band_id, "
-        f"CAST(mh{2 * b} AS VARCHAR) || ',' || CAST(mh{2 * b + 1} AS VARCHAR)"
-        f" AS band_key FROM sig"
-        for b in range(dedup.N_PERMS // dedup.BAND_SIZE)
-    ),
-    bench_shingles=_shingle_rows_sql(
-        "(SELECT doc_id, text FROM documents WHERE "
-        + _HASH_SQL.format(x="CAST(doc_id AS VARCHAR)") + " % 20 = 0)",
-        _WORDS_SQL,
-    ),
-    ded_shingles=_shingle_rows_sql("deduped", _WORDS_RED_SQL),
-    id_hash=_HASH_SQL.format(x="CAST(doc_id AS VARCHAR)"),
-)
-
-
 def q_doc_fingerprints(spark, sf_dir):
     return textstats.doc_fingerprints(_t(spark, sf_dir, "documents"))
 
@@ -1876,36 +1696,8 @@ FROM b
 
 
 # --------------------------------------------------------------------------
-# T34–T37 — substring dedup, semantic dedup, image curation, link PageRank
+# T35–T36 — semantic dedup, image curation
 # --------------------------------------------------------------------------
-
-_SPAN_LEN = 8  # words per duplicate-detection window (T34)
-
-
-def q_substring_dedup(spark, sf_dir):
-    """T34 — exact duplicate-span coverage per document (Lee et al. 2022's
-    ExactSubstr granularity, word-window form): how much of each doc is made
-    of spans that also appear in other docs."""
-    return dedup.duplicate_span_stats(
-        _t(spark, sf_dir, "documents"), span_len=_SPAN_LEN, min_docs=2
-    )
-
-
-SQL_SUBSTRING_DEDUP = f"""
-WITH w AS (SELECT doc_id, {_WORDS_SQL} AS words FROM documents),
-sp AS (SELECT doc_id,
-              {_HASH_SQL.format(
-                  x=f"array_to_string(words[i.i : i.i + {_SPAN_LEN - 1}], ' ')")} AS h
-       FROM w, unnest(range(1, len(words) - {_SPAN_LEN} + 2)) AS i(i)),
-st AS (SELECT h, count(DISTINCT doc_id) AS nd FROM sp GROUP BY h),
-per AS (SELECT sp.doc_id, count(*) AS n_spans,
-               sum(CASE WHEN st.nd >= 2 THEN 1 ELSE 0 END) AS n_dup_spans
-        FROM sp JOIN st USING (h) GROUP BY sp.doc_id)
-SELECT d.doc_id, CAST(coalesce(per.n_spans, 0) AS BIGINT) AS n_spans,
-       CAST(coalesce(per.n_dup_spans, 0) AS BIGINT) AS n_dup_spans
-FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-"""
-
 
 # SemDeDup ball radius for THIS synthetic embedding table: the vectors are
 # near-orthogonal (within-cluster cosine p99 ≈ 0.32, max ≈ 0.49 at sf0.01),
@@ -2026,73 +1818,6 @@ WHERE least(w, h) >= 200 AND w * 3 >= h AND h * 3 >= w
 """
 
 
-_PR_NODES = 500  # node-space modulus for the constructed link graph
-_PR_ITERS = 3
-
-
-def _pr_edges(spark, sf_dir):
-    """The T37 link graph: lineitem order→part incidence folded into a
-    node space of ``_PR_NODES`` (src = l_orderkey % N, dst = l_partkey %
-    N), self-loops dropped, distinct. Shared by the registry query and the
-    plan-inspection test (which needs ``materialize=False``)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.select(
-            (F.col("l_orderkey") % _PR_NODES).alias("src"),
-            (F.col("l_partkey") % _PR_NODES).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
-def q_link_pagerank(spark, sf_dir):
-    """T37 — frontier prioritization by link authority: integer fixed-point
-    PageRank (graph.pagerank_units) over a link graph constructed from the
-    lineitem order→part incidence (src = l_orderkey % N, dst = l_partkey %
-    N) — the same priority signal a crawl scheduler feeds into the W2
-    politeness dequeue."""
-    from ..operators import graph
-
-    return graph.pagerank_units(_pr_edges(spark, sf_dir), iters=_PR_ITERS)
-
-
-def _pr_iter_sql(prev: str) -> str:
-    # staged damping — (inc DIV 100)*85 + ((inc % 100)*85) DIV 100 — mirrors
-    # operators/graph.py exactly: same longs at any scale, no int64 wrap
-    from ..operators.graph import BASE, DAMP_DEN, DAMP_NUM
-
-    return f"""SELECT n.node,
-       CAST({BASE} + (coalesce(i.inc, 0) // {DAMP_DEN}) * {DAMP_NUM}
-            + ((coalesce(i.inc, 0) % {DAMP_DEN}) * {DAMP_NUM}) // {DAMP_DEN}
-        AS BIGINT) AS rank_units
-FROM n LEFT JOIN (
-  SELECT e.dst AS node, sum({prev}.rank_units // od.outdeg) AS inc
-  FROM e JOIN od USING (src) JOIN {prev} ON {prev}.node = e.src
-  GROUP BY e.dst) i USING (node)"""
-
-
-def _pr_sql() -> str:
-    from ..operators.graph import UNIT
-
-    return f"""
-WITH e AS (SELECT DISTINCT l_orderkey % {_PR_NODES} AS src,
-                           l_partkey % {_PR_NODES} AS dst
-           FROM lineitem
-           WHERE l_orderkey % {_PR_NODES} <> l_partkey % {_PR_NODES}),
-od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
-n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-r0 AS (SELECT node, CAST({UNIT} AS BIGINT) AS rank_units FROM n),
-r1 AS ({_pr_iter_sql("r0")}),
-r2 AS ({_pr_iter_sql("r1")}),
-r3 AS ({_pr_iter_sql("r2")})
-SELECT node, rank_units FROM r3
-"""
-
-
-SQL_LINK_PAGERANK = _pr_sql()
-
-
 # --------------------------------------------------------------------------
 
 QUERIES = {
@@ -2140,7 +1865,6 @@ QUERIES = {
     "pii_redact": (q_pii_redact, SQL_PII_REDACT),
     "stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
     "contamination_check": (q_contamination_check, SQL_CONTAMINATION_CHECK),
-    "curation_pipeline": (q_curation_pipeline, SQL_CURATION_PIPELINE),
     "cosine_topk": (q_cosine_topk, SQL_COSINE_TOPK),
     "embedding_neardup": (q_embedding_neardup, SQL_EMBEDDING_NEARDUP),
     "embedding_neardup_lsh": (q_embedding_neardup_lsh, SQL_EMBEDDING_NEARDUP_LSH),
@@ -2149,10 +1873,8 @@ QUERIES = {
         q_phash_neardup_components, SQL_PHASH_NEARDUP_COMPONENTS,
     ),
     "similarity_ivf": (q_similarity_ivf, SQL_SIMILARITY_IVF),
-    "substring_dedup": (q_substring_dedup, SQL_SUBSTRING_DEDUP),
     "semantic_dedup": (q_semantic_dedup, SQL_SEMANTIC_DEDUP),
     "image_curation": (q_image_curation, SQL_IMAGE_CURATION),
-    "link_pagerank": (q_link_pagerank, SQL_LINK_PAGERANK),
     "scrape_tables": (q_scrape_tables, SQL_SCRAPE_TABLES),
     "lang_id": (q_lang_id, SQL_LANG_ID),
     "similarity_lsh_bucketed": (q_similarity_lsh_bucketed, SQL_SIMILARITY_LSH_BUCKETED),

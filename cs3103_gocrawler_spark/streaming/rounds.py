@@ -17,20 +17,20 @@ One round replaces one wave of the reference's goroutine tree
     frontier_{r+1} = min-(depth,parent) merge(children ∪ deferred)  (A5)
     manifest commit = checkpoint
 
-Job discipline (this matters at scale as much as shuffle discipline): a round
-runs exactly 3 Spark jobs — fetched write, ONE round-state job
-(seen.build_round_state: outcome counts + min-depth + the bloom segment
-deltas built executor-side; the driver receives bloom-sized segment rows,
-never per-URL rows), and the frontier write. Row counts come from parquet
-footer metadata on the driver (Iceberg: snapshot summaries), not count()
-jobs. visited/rejected/seen/validation are *views* over the fetched table
-(column-pruned, predicate-filtered parquet reads), not extra
-materializations; payload validation runs inside the fetch pass (the payload
-reaches a Python worker exactly once and never re-joins); per-round metrics
-are buffered into the manifest and written as a table once at the end. The
-earlier 12-job round spent more wall-clock on fixed job overhead than on
-data at local-bench scale — the same tax a 1000-executor cluster pays in
-scheduler round-trips.
+Job discipline: the round's per-URL work rides a few writes — the fetched
+write (outcome counts and min depth ride it as ``Observation`` metrics), the
+bloom segment build (seen.build_round_state: one action; the driver receives
+at most bloom-sized segment rows, never per-URL rows) and the frontier write.
+Row counts come from parquet footer metadata on the driver (Iceberg:
+snapshot summaries), not count() jobs. visited/rejected/seen/validation are
+*views* over the fetched table (column-pruned, predicate-filtered parquet
+reads), not extra materializations; payload validation runs inside the
+fetch pass (the payload reaches a Python worker exactly once and never
+re-joins); per-round metrics are buffered into the manifest and written as a
+table once at the end. Each write still runs several Spark jobs (AQE query
+stages, the dequeue windows, the children pipeline): traced crawlbench runs
+count ~12 jobs per round on wide-bfs and ~29 on polite-deep
+(``rounds.spark_jobs_per_round``, seed 101, local[4]).
 
 Determinism: every output table has an order-insensitive definition; the
 recorded crawl ordering (W3) is ``row_number() OVER (PARTITION BY host ORDER
@@ -557,15 +557,11 @@ class CrawlEngine:
         )
         if bloom_needed and dequeued_n > 0 and not self._exact_only:
             build_round_state(
-                processed.select("url_sha1"), self.bloom,
+                processed, self.bloom,
                 segments_sink=(
                     (self.cat, r) if self.bloom_mode == "partitioned" else None
                 ),
             )
-            if self.bloom_mode != "partitioned":
-                # the sha1-only build can't see row counts; mark the filter
-                # live for the probe path's n_added gate
-                self.bloom.n_added += dequeued_n
         _mark("round_state")
 
         if allowance is not None:

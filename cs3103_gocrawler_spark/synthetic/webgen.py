@@ -44,7 +44,7 @@ _WORDS = (
 _FMTS = ("png", "jpeg", "webp")
 
 # Bump on ANY change to payload/edge derivation (pixel bytes, caption text,
-# fmt assignment, link targets …). Cache keys (bench.py) embed this so a web
+# fmt assignment, link targets …). Cache keys (crawlbench) embed this so a web
 # generated by an older derivation regenerates instead of silently failing
 # the validation recompute.
 WEBGEN_VERSION = 2

@@ -7,11 +7,12 @@ Mirrors the driver's recorded behavior (CORRECTNESS_r01.json): pandas
 ``sort_values`` over all columns — which is exactly what errors on list-typed
 columns, so this harness catches those before the driver does.
 
-Usage: python scripts/check_correctness.py [query ...]
+Usage: python scripts/check_correctness.py [--json-out PATH] [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
 import os
@@ -41,14 +42,14 @@ def _hash(pdf) -> str:
     return hashlib.sha256("\n".join(parts).encode()).hexdigest()
 
 
-def main():
-    argv = sys.argv[1:]
-    json_out = None
-    if "--json-out" in argv:
-        i = argv.index("--json-out")
-        json_out = argv[i + 1]
-        argv = argv[:i] + argv[i + 2:]
-    only = set(argv)
+def main(argv=None):
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--json-out", metavar="PATH",
+                    help="also write the per-query records as JSON")
+    ap.add_argument("queries", nargs="*", help="only these registry entries")
+    args = ap.parse_args(argv)
+    json_out = args.json_out
+    only = set(args.queries)
 
     import duckdb
 
@@ -69,21 +70,18 @@ def main():
         rec = {"rows_match": None, "schema_match": None, "hash_match": None, "err": None}
         try:
             sp = _canon(fn(spark, SF_DIR).toPandas())
-            if sql is None:
-                rec.update(rows_match=len(sp) >= 0, spark_rows=len(sp), err="no_oracle")
-            else:
-                du = _canon(con.execute(sql).df())
-                rec.update(
-                    rows_match=len(sp) == len(du),
-                    schema_match=list(sp.columns) == list(du.columns),
-                    hash_match=_hash(sp) == _hash(du),
-                    spark_rows=len(sp), oracle_rows=len(du),
-                )
-                if not (rec["rows_match"] and rec["schema_match"] and rec["hash_match"]):
-                    n_bad += 1
-                    if len(sp) == len(du):
-                        diff = (sp.astype(str) != du.astype(str)).any(axis=0)
-                        rec["diff_cols"] = list(diff[diff].index)
+            du = _canon(con.execute(sql).df())
+            rec.update(
+                rows_match=len(sp) == len(du),
+                schema_match=list(sp.columns) == list(du.columns),
+                hash_match=_hash(sp) == _hash(du),
+                spark_rows=len(sp), oracle_rows=len(du),
+            )
+            if not (rec["rows_match"] and rec["schema_match"] and rec["hash_match"]):
+                n_bad += 1
+                if len(sp) == len(du):
+                    diff = (sp.astype(str) != du.astype(str)).any(axis=0)
+                    rec["diff_cols"] = list(diff[diff].index)
         except Exception as e:  # noqa: BLE001
             rec["err"] = f"{type(e).__name__}: {e}"[:300]
             n_bad += 1
@@ -94,8 +92,7 @@ def main():
     if json_out:
         with open(json_out, "w") as f:
             json.dump(results, f, indent=1)
-    print(f"\n{n_bad} problem rows (no_oracle entries not counted as problems "
-          f"unless they raise)")
+    print(f"\n{n_bad} problem rows")
     # exit nonzero on ANY problem row — hash/row/schema mismatches included,
     # not just raised exceptions (a BAD row is a broken query even when both
     # engines ran to completion)

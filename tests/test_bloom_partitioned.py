@@ -37,8 +37,7 @@ def test_partitioned_probe_matches_broadcast(spark, tmp_path):
 
     # partitioned path: identical geometry, bits written executor-side only
     b_part = Bloom(1 << 14, n_segments=8)
-    counts, _ = build_round_state(seen_df, b_part, segments_sink=(cat, 0))
-    assert counts == {"ok": 200}
+    build_round_state(seen_df, b_part, segments_sink=(cat, 0))
     assert b_part.n_added == 0  # driver bloom untouched in this mode
     segments = cat.read_all("bloom_segments")
 

@@ -1,6 +1,6 @@
-"""Operator-level unit tests: politeness exactness, bloom behavior,
-similarity recall, multimodal plumbing, and physical-plan sanity
-(pushdown / broadcast — the §4.2 scale discipline)."""
+"""Operator-level unit tests: politeness exactness, bloom behavior, the
+seen-set build's job count, similarity recall, multimodal plumbing, and
+physical-plan sanity (pushdown / broadcast — the §4.2 scale discipline)."""
 
 import numpy as np
 import pandas as pd
@@ -9,8 +9,13 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from cs3103_gocrawler_spark.functions.urlfuncs import sha1_64
 from cs3103_gocrawler_spark.operators.politeness import dequeue
-from cs3103_gocrawler_spark.operators.seen import Bloom
+from cs3103_gocrawler_spark.operators.seen import (
+    Bloom,
+    build_bloom_distributed,
+    build_round_state,
+)
 from cs3103_gocrawler_spark.operators.similarity import bucketed_cosine_topk, cosine_topk
+from cs3103_gocrawler_spark.storage import RoundCatalog
 
 
 def _pending_df(spark, n_hosts=5, per_host=40):
@@ -78,33 +83,73 @@ def test_segmented_bloom_matches_unsegmented_semantics():
     assert b.might_contain(other).mean() < 0.01
 
 
+def _sha1_df(spark, n, seed):
+    rng = np.random.default_rng(seed)
+    h = rng.integers(-(2**62), 2**62, size=n, dtype=np.int64)
+    return h, spark.createDataFrame(pd.DataFrame({"url_sha1": h})).repartition(8)
+
+
+def _jobs(spark, group, fn):
+    """Spark job ids ``fn`` ran, counted by the status tracker under a job
+    group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_build_round_state_executor_side(spark):
     """The distributed segment build must produce a bit-identical filter to
-    the driver-side add, and return exact outcome counts + min depth — this
-    is the gate that the round path needs no full-result toPandas."""
-    from cs3103_gocrawler_spark.operators.seen import build_round_state
-
-    rng = np.random.default_rng(2)
-    h = rng.integers(-(2**62), 2**62, size=5_000, dtype=np.int64)
-    pdf = pd.DataFrame({
-        "url_sha1": h,
-        "depth": (np.arange(len(h)) % 5) + 2,
-        "outcome": np.where(np.arange(len(h)) % 7 == 0, "fetch_error", "ok"),
-    })
-    df = spark.createDataFrame(pdf).repartition(8)
-
+    the driver-side add, with an exact ``n_added`` — this is the gate that
+    the round path needs no full-result toPandas."""
+    h, df = _sha1_df(spark, 5_000, 2)
     b_driver = Bloom(capacity=20_000, fpr=1e-3, n_segments=8)
     b_driver.add(h)
     b_dist = Bloom(capacity=20_000, fpr=1e-3, n_segments=8)
-    counts, min_depth = build_round_state(df, b_dist)
+    assert build_round_state(df, b_dist) is None
 
     assert np.array_equal(b_driver.bits, b_dist.bits)
     assert b_dist.n_added == len(h)
-    assert counts == {
-        "ok": int((pdf["outcome"] == "ok").sum()),
-        "fetch_error": int((pdf["outcome"] == "fetch_error").sum()),
-    }
-    assert min_depth == 2
+
+
+def test_partitioned_build_round_state_is_one_write(spark, tmp_path):
+    """The partitioned segment build is the segment-table write alone — no
+    read-back of stats rows after it. It runs the same jobs as collecting
+    the same segment rows in broadcast mode: the segment shuffle's map stage
+    (its own job under AQE) and the one action."""
+    _, df = _sha1_df(spark, 2_000, 3)
+    collect_jobs = _jobs(spark, "seen-broadcast-build", lambda: build_round_state(
+        df, Bloom(capacity=20_000, fpr=1e-3, n_segments=8)
+    ))
+    cat = RoundCatalog(spark, str(tmp_path))
+    b = Bloom(capacity=20_000, fpr=1e-3, n_segments=8)
+    jobs = _jobs(spark, "seen-partitioned-build", lambda: build_round_state(
+        df, b, segments_sink=(cat, 0)
+    ))
+    assert len(jobs) == len(collect_jobs) <= 2, (jobs, collect_jobs)
+    assert cat.read("bloom_segments", 0).count() == 8
+    assert b.n_added == 0  # driver bloom untouched in this mode
+
+
+def test_broadcast_resume_build_counts_rows_without_count_job(spark, monkeypatch):
+    """The resume rebuild takes ``n_added`` from the segment rows it
+    collects: exact, and without a ``count()`` job over the seen table."""
+    h, df = _sha1_df(spark, 3_000, 4)
+    b_ref = Bloom(capacity=20_000, fpr=1e-3, n_segments=8)
+    build_jobs = _jobs(spark, "seen-round-build", lambda: build_round_state(df, b_ref))
+
+    def no_count(self):
+        raise AssertionError("count() job in the bloom rebuild")
+
+    monkeypatch.setattr(type(df), "count", no_count)
+    b = Bloom(capacity=20_000, fpr=1e-3, n_segments=8)
+    jobs = _jobs(spark, "seen-resume-build", lambda: build_bloom_distributed(df, b))
+    assert b.n_added == len(h)
+    assert np.array_equal(b.bits, b_ref.bits)
+    assert len(jobs) == len(build_jobs), (jobs, build_jobs)
 
 
 def _emb_df(spark, n=120, dim=16, seed=0):
@@ -650,32 +695,6 @@ def test_host_skew_stats_exact_percentiles(spark, tmp_path):
     assert abs(got.skew_ratio - round(100 / 55, 6)) < 1e-9
 
 
-def test_duplicate_span_stats_semantics(spark):
-    """T34: shared 8-word span counted per doc; short docs get zeros."""
-    from cs3103_gocrawler_spark.operators import dedup
-
-    shared = "alpha bravo charlie delta echo foxtrot golf hotel"
-    docs = spark.createDataFrame(
-        [
-            # 10 words -> 3 windows; windows 1-? include the shared span once
-            (1, shared + " india juliet"),
-            (2, "zulu " + shared + " yankee"),
-            (3, "completely different words one two three four five six seven"),
-            (4, "too short"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {
-        r["doc_id"]: (r["n_spans"], r["n_dup_spans"])
-        for r in dedup.duplicate_span_stats(docs, span_len=8).collect()
-    }
-    # doc 1: 10 words -> 3 windows, exactly window 1 == shared (docs 1+2)
-    assert rows[1] == (3, 1)
-    assert rows[2] == (3, 1)   # shared span sits at window 2 of doc 2
-    assert rows[3] == (3, 0)   # 10 words -> 3 windows, none shared
-    assert rows[4] == (0, 0)   # < span_len words -> no windows at all
-
-
 def test_semantic_dedup_pairwise_keep_rule(spark):
     """T35: within a cluster, a vector is dropped iff a SMALLER-id vector
     sits within the cosine ball; cross-cluster twins are not compared."""
@@ -715,89 +734,6 @@ def test_semantic_dedup_list_guard(spark):
     )
     with pytest.raises(ValueError, match="max_list_size"):
         similarity.semantic_dedup(emb, n_centroids=2, max_list_size=10)
-
-
-def test_pagerank_units_matches_hand_computation(spark):
-    """T37: the integer fixed-point recurrence reproduced in pure Python on
-    a 4-node graph with a dangling node and an in-degree-0 node."""
-    from cs3103_gocrawler_spark.operators import graph
-
-    edges = [(1, 2), (1, 3), (2, 3), (4, 1)]  # 3 dangles; 4 has no in-links
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: r["rank_units"]
-        for r in graph.pagerank_units(df, iters=3).collect()
-    }
-
-    outdeg = {1: 2, 2: 1, 4: 1}
-    r = {n: graph.UNIT for n in (1, 2, 3, 4)}
-    for _ in range(3):
-        inc = {n: 0 for n in r}
-        for s, d in edges:
-            inc[d] += r[s] // outdeg[s]
-        r = {
-            n: graph.BASE + (graph.DAMP_NUM * inc[n]) // graph.DAMP_DEN
-            for n in r
-        }
-    assert got == r
-    # dangling node keeps receiving; source-only node decays to base floor
-    assert got[4] == graph.BASE
-
-
-def test_pagerank_units_releases_cached_relations(spark):
-    """ADVICE r4: the round-4 version persisted nodes + the degree-annotated
-    edge list and never unpersisted them, leaking two cached relations per
-    call. The materialized default must leave the DataFrame cache manager
-    EMPTY and still return correct, re-collectable ranks — identical to the
-    lazy (materialize=False) plan."""
-    from cs3103_gocrawler_spark.operators import graph
-
-    spark.catalog.clearCache()
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3), (4, 1)], "src long, dst long"
-    )
-    ranks = graph.pagerank_units(edges, iters=3)
-    got = {r["node"]: r["rank_units"] for r in ranks.collect()}
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
-        "pagerank_units left relations pinned in the cache manager"
-    )
-    try:
-        lazy = {
-            r["node"]: r["rank_units"]
-            for r in graph.pagerank_units(
-                edges, iters=3, materialize=False
-            ).collect()
-        }
-    finally:
-        spark.catalog.clearCache()
-    assert got == lazy
-    # the checkpointed result stays collectable after the input releases
-    assert ranks.count() == 4
-
-
-def test_rank_link_graph_includes_unfetched_targets(spark):
-    """T37 engine bridge: ranks come from the visited set's links explode,
-    and never-fetched link targets surface as rankable frontier nodes."""
-    from cs3103_gocrawler_spark.operators import graph
-
-    visited = spark.createDataFrame(
-        [
-            ("a", ["b", "x"]),   # x is never fetched
-            ("b", ["a", "x"]),
-        ],
-        "url string, links array<string>",
-    )
-    got = {r["url"]: r["rank_units"] for r in graph.rank_link_graph(visited).collect()}
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "x"), ("b", "a"), ("b", "x")], "src string, dst string"
-    )
-    want = {
-        r["node"]: r["rank_units"]
-        for r in graph.pagerank_units(edges, iters=3).collect()
-    }
-    assert got == want
-    assert "x" in got                       # unfetched target is rankable
-    assert got["x"] > got["a"] == got["b"]  # two in-links beat one, symmetric pair ties
 
 
 # --------------------------------------------------------------------------

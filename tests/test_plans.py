@@ -235,11 +235,6 @@ PLAN_FINGERPRINTS = {
     # per-key-count relation only, never the raw rows
     "host_skew_stats": {"BroadcastNestedLoopJoin": 1, "Exchange": 4,
                         "HashAggregate": 8, "Sort": 1, "Window": 1},
-    # T34: Generate=1 pins the single corpus explode (the groupBy+join-back
-    # formulation re-explodes the corpus on both branches); the dup-doc
-    # count is a Window over the reduced (hash, doc) relation
-    "substring_dedup": {"BroadcastHashJoin": 1, "Exchange": 3, "Generate": 1,
-                        "HashAggregate": 4, "Sort": 1, "Window": 1},
     # T35: the 1 SortMergeJoin is the cid-co-partitioned inverted-list
     # pairing — no CartesianProduct / BroadcastNestedLoopJoin may appear
     "semantic_dedup": {"BroadcastHashJoin": 1, "Exchange": 2,
@@ -287,48 +282,3 @@ def test_headline_plan_fingerprint(spark, name):
         f"{name}: physical plan shape drifted\n"
         f"  pinned: {PLAN_FINGERPRINTS[name]}\n  got:    {got}"
     )
-
-
-def test_curation_pipeline_scans_corpus_once(spark):
-    """The composed pipeline's one persisted documents scan: every
-    downstream traversal must read the cache (InMemoryTableScan), with zero
-    direct parquet scans of documents left in the final plan."""
-    from cs3103_gocrawler_spark.plans.generic_queries import q_curation_pipeline
-
-    df = q_curation_pipeline(spark, SF_DIR)
-    plan = _formatted(df)
-    assert "InMemoryTableScan" in plan
-    n_doc_scans = len(
-        re.findall(r"Scan parquet[^\n]*\n[^\n]*documents\.parquet", plan)
-    ) + plan.count("FileScan parquet")
-    assert n_doc_scans == 0, f"corpus re-scanned past the cache:\n{plan[:4000]}"
-
-
-@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="testdata missing")
-def test_link_pagerank_iterations_read_cached_state(spark):
-    """T37: every iteration must read the persisted nodes / degree-annotated
-    edge relations instead of re-deriving them from the raw edge scan —
-    7 InMemoryTableScans = nodes x4 (r0 + three inc-merges) + ew x3.
-    (A flat-count fingerprint is useless here: InMemoryRelation prints its
-    build plan nested inside the string, inflating node counts.)
-
-    Uses materialize=False to get the lazy iteration plan back — the
-    registry path (materialize=True) localCheckpoints the result and
-    unpersists both relations, so its final plan is just the checkpoint
-    scan (that no-leak behavior is asserted in test_operators)."""
-    from cs3103_gocrawler_spark.operators import graph
-    from cs3103_gocrawler_spark.plans.generic_queries import (
-        _PR_ITERS,
-        _pr_edges,
-    )
-
-    spark.catalog.clearCache()
-    try:
-        ranks = graph.pagerank_units(
-            _pr_edges(spark, SF_DIR), iters=_PR_ITERS, materialize=False
-        )
-        plan = _plan(ranks)
-        assert plan.count("InMemoryTableScan") == 7, plan[:2000]
-        assert "CartesianProduct" not in plan
-    finally:
-        spark.catalog.clearCache()

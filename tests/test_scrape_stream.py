@@ -1,4 +1,4 @@
-"""X4 scrape operator + Structured Streaming window aggregation."""
+"""X4 scrape operator: the reference tianalyser's HTML-table scrape."""
 
 from cs3103_gocrawler_spark.operators.scrape import (
     extract_tables_py,
@@ -32,89 +32,6 @@ def test_scrape_tables_matches_captions(spark, tiny_web):
         got = grp.sort_values("row_idx")["cells"].tolist()
         assert [c[1] for c in got] == words
     assert F is not None
-
-
-def test_structured_streaming_matches_batch(spark, tmp_path):
-    """availableNow stream over the events parquet equals the batch window agg."""
-    import shutil
-
-    from cs3103_gocrawler_spark.plans.generic_queries import q_event_window_agg
-    from cs3103_gocrawler_spark.streaming.events_stream import (
-        stream_event_window_counts,
-        streamed_counts_df,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    # FileStreamSource watches a directory; the testdata table is a single
-    # parquet file, so stage it into one (the production contract is a dir).
-    events_dir = tmp_path / "events_in"
-    events_dir.mkdir()
-    shutil.copy(f"{sf}/events.parquet", events_dir / "part-0.parquet")
-    q = stream_event_window_counts(
-        spark, str(events_dir), schema, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-    got = (
-        streamed_counts_df(spark).toPandas()
-        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
-    )
-    want = (
-        q_event_window_agg(spark, sf).toPandas()
-        .sort_values(["window_start", "event_type"]).reset_index(drop=True)
-    )
-    assert got[["window_start", "event_type", "n_events", "value_milli"]].equals(
-        want[["window_start", "event_type", "n_events", "value_milli"]]
-    )
-
-
-def test_stateful_stream_matches_batch(spark, tmp_path):
-    """applyInPandasWithState running totals equal the batch aggregate."""
-    import shutil
-
-    from pyspark.sql import functions as F  # noqa: N812
-
-    from cs3103_gocrawler_spark.streaming.events_stream import (
-        stream_host_running_totals,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    events_dir = tmp_path / "events_state_in"
-    events_dir.mkdir()
-    shutil.copy(f"{sf}/events.parquet", events_dir / "part-0.parquet")
-    q = stream_host_running_totals(
-        spark, str(events_dir), schema, str(tmp_path / "ckpt_state")
-    )
-    q.awaitTermination(120)
-    got = (
-        spark.table("host_running_totals")
-        .toPandas()
-        .sort_values("n_events", ascending=False)
-        .drop_duplicates("event_type")  # last update per key wins
-        .sort_values("event_type")
-        .reset_index(drop=True)
-    )
-    want = (
-        spark.read.parquet(f"{sf}/events.parquet")
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.floor(F.col("value") * 1000).cast("long")).alias("value_milli"),
-        )
-        .toPandas()
-        .sort_values("event_type")
-        .reset_index(drop=True)
-    )
-    assert got[["event_type", "n_events", "value_milli"]].equals(
-        want[["event_type", "n_events", "value_milli"]]
-    )
 
 
 def test_country_representation_roundtrip_ti_stats(spark):
@@ -153,74 +70,3 @@ def test_country_representation_roundtrip_ti_stats(spark):
             assert row["country"] == want["country"], (url, row["country"])
             assert row["representation"] == want["representation"]
             assert list(row["players"]) == want["players"], (url, want["country"])
-
-
-def test_stream_dedup_matches_batch_distinct(spark, tmp_path):
-    """Streaming dropDuplicates (watermarked seen-set analog) equals batch
-    distinct-on-key over the same input — including across duplicated files."""
-    import shutil
-
-    from cs3103_gocrawler_spark.streaming.events_stream import stream_dedup_events
-
-    sf = "/root/testdata/sf0.001"
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    events_dir = tmp_path / "dd_in"
-    events_dir.mkdir()
-    # two copies: every key arrives at least twice across micro-batch files
-    shutil.copy(f"{sf}/events.parquet", events_dir / "a.parquet")
-    shutil.copy(f"{sf}/events.parquet", events_dir / "b.parquet")
-    q = stream_dedup_events(
-        spark, str(events_dir), schema, str(tmp_path / "dd_ckpt")
-    )
-    q.awaitTermination(120)
-    got = spark.table("deduped_events").toPandas()
-    batch_n = spark.read.parquet(f"{sf}/events.parquet").select("event_id").distinct().count()
-    assert len(got) == batch_n
-    assert got["event_id"].is_unique
-
-
-def test_session_window_stream_matches_batch(spark, tmp_path):
-    """T41: native session_window sessionization — the availableNow stream
-    over the events parquet equals the identical batch aggregation (the same
-    _session_agg plan fragment run in both modes), and session shapes are
-    sane (end - start >= gap, n_events >= 1)."""
-    import shutil
-
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: N812
-
-    from cs3103_gocrawler_spark.streaming.events_stream import (
-        _session_agg,
-        stream_sessionize,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    events_dir = tmp_path / "events_in"
-    events_dir.mkdir()
-    shutil.copy(f"{sf}/events.parquet", events_dir / "part-0.parquet")
-    q = stream_sessionize(spark, str(events_dir), schema, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-    cols = ["session_start", "session_end", "user_id", "n_events", "value_cents"]
-    got = (
-        spark.table("sessionized_events").toPandas()[cols]
-        .sort_values(cols).reset_index(drop=True)
-    )
-    batch = spark.read.parquet(str(events_dir)).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    want = (
-        _session_agg(batch, "30 minutes", "user_id", "ts").toPandas()[cols]
-        .sort_values(cols).reset_index(drop=True)
-    )
-    assert len(got) > 0
-    assert got.equals(want)
-    assert (got["n_events"] >= 1).all()
-    assert ((got["session_end"] - got["session_start"])
-            >= pd.Timedelta(minutes=30)).all()
