@@ -5,7 +5,9 @@ attributes, resolve against the current URL, drop blacklisted hosts,
 deduplicate, sort. Runs per row inside the fused fetch pass
 (``fetch.fetch_process``), which returns the links as ``array<string>`` —
 HTML parse stays in Python (the one place it must), the explode/fan-out
-stays JVM-side.
+stays JVM-side. Contract: every extractor returns canonical links (a user
+extractor is wrapped by ``canonicalizing``), so the round never
+canonicalizes a link again.
 
 The regex href scan matches the generator's output and any well-formed
 ``<a ... href="...">`` / ``href='...'`` tag; a full HTML5 parser is a drop-in
@@ -21,18 +23,6 @@ from ..functions.urlfuncs import canonicalize_url, split_canonical
 _HREF_RE = re.compile(r"""<a\s[^>]*?href\s*=\s*["']([^"']*)["']""", re.IGNORECASE)
 
 
-def extract_links_py(base_url: str, body_html: str, blacklist: frozenset[str]) -> list[str]:
-    """Pure-Python core shared with tests: canonical, blacklist-filtered,
-    deduped, sorted (linkextractor.go:31-63 semantics)."""
-    out = set()
-    for href in _HREF_RE.findall(body_html or ""):
-        cu = canonicalize_url(href, base=base_url)
-        if cu is None or split_canonical(cu)[0] in blacklist:
-            continue
-        out.add(cu)
-    return sorted(out)
-
-
 def expand_blacklist_www(hosts) -> frozenset[str]:
     """SO3 — the reference blacklists every host with AND without the 'www.'
     prefix (example/explorer/internal/explorer/config.go:52-65)."""
@@ -44,6 +34,21 @@ def expand_blacklist_www(hosts) -> frozenset[str]:
         out.add(h)
         out.add(h[4:] if h.startswith("www.") else "www." + h)
     return frozenset(out)
+
+
+def canonicalizing(extractor):
+    """Wrap a user extractor so its output meets the canonical-links
+    contract: each entry becomes ``canonicalize_url(u)`` (no base), and
+    ``None``, unparsable and non-http(s) entries are dropped."""
+
+    def extract(base_url: str, body_html: str) -> list[str] | None:
+        links = extractor(base_url, body_html)
+        if links is None:
+            return None
+        canon = (canonicalize_url(u) for u in links if u is not None)
+        return [cu for cu in canon if cu is not None]
+
+    return extract
 
 
 def make_scoped_extractor(
@@ -67,8 +72,8 @@ def make_scoped_extractor(
 
     The returned callable plugs into ``fetch_process(extractor=...)`` and
     ships to executors in the UDF closure; any user extractor with the same
-    signature slots in identically (reference ``LinkExtractor`` field,
-    linkextractor.go:14).
+    signature slots in, behind ``canonicalizing`` (reference
+    ``LinkExtractor`` field, linkextractor.go:14).
     """
 
     def extract(base_url: str, body_html: str) -> list[str]:

@@ -10,10 +10,10 @@ one connection pool per executor slot, retry+backoff per element
     are bucketed by the same key so it is a storage-partitioned join with no
     full shuffle (SURVEY.md §4.2.5). The join output's big columns go
     straight into ONE fused ``mapInPandas`` pass (``fetch_process``) that
-    runs everything Python-side — retry/backoff enrich, href extraction,
-    payload validation — and drops them inside the worker, so they never
-    enter a shuffle NOR a second JVM↔Python pipe crossing (§4.2 spill
-    discipline; profiling numbers in the ``fetch_process`` docstring).
+    runs everything Python-side — retry/backoff enrich, canonical href
+    extraction, payload validation — and drops them inside the worker, so
+    they never enter a shuffle NOR a second JVM↔Python pipe crossing (§4.2
+    spill discipline; profiling numbers in the ``fetch_process`` docstring).
 
 The enrich logic runs exactly where live HTTP would: it computes the
 deterministic synthetic response time (webgen page_resp_ms) and simulates
@@ -92,21 +92,21 @@ def fetch_process(
     Python does only what needs Python: retry/backoff simulation
     (rhttp.go:45-63), href extraction + canonicalization
     (linkextractor.go:19-66), and image decode/phash/PSNR/caption validation
-    (input_hint invariants).
+    (input_hint invariants). ``links`` leave canonical: no later stage
+    canonicalizes them again.
 
     Output = input cols (minus payload; ``fmt`` kept as lineage) plus
     ``found, outcome, resp_ms, attempts, backoff_ms, links`` and, when
     ``validate``, the validation columns; ``partition_id`` lineage appended.
     """
-    from .extract import extract_links_py
+    from .extract import make_scoped_extractor
     from .validate import VALIDATION_COL_NAMES, _validate_row
 
     # X2 plug-point: any (base_url, body_html) -> list[str] callable — the
-    # reference's pluggable LinkExtractor (linkextractor.go:14); the three
-    # example-app scopes come from extract.make_scoped_extractor
+    # reference's pluggable LinkExtractor (linkextractor.go:14); the default
+    # and the three example-app scopes come from extract.make_scoped_extractor
     if extractor is None:
-        def extractor(u, b, _bl=blacklist):  # noqa: E731 — default extractor
-            return extract_links_py(u, b, _bl)
+        extractor = make_scoped_extractor(blacklist=blacklist)
 
     if http is not None:
         if validate:

@@ -185,14 +185,3 @@ def write_report(engine, path: str, wall_sec: float, config: dict,
     with open(path, "w") as fh:
         json.dump(report, fh, indent=2, sort_keys=True)
     return report
-
-
-def round_summary(metrics: DataFrame) -> DataFrame:
-    """Totals across rounds — the report header scalars (A7)."""
-    return metrics.agg(
-        F.count("*").alias("rounds"),
-        F.sum("dequeued").alias("total_dequeued"),
-        F.sum("fetched_ok").alias("total_fetched_ok"),
-        F.sum("rejected").alias("total_rejected"),
-        F.sum("elapsed_ms").alias("total_elapsed_ms"),
-    )

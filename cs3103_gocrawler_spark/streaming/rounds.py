@@ -12,7 +12,7 @@ One round replaces one wave of the reference's goroutine tree
               dropped inside the Python worker              │
             → write fetched_r                               │
                        ↑ the ONE materialization point      │
-    children = explode(links) → canonicalize (U1)           │
+    children = explode(links) → url columns on the JVM      │
              → robots gate → bloom + anti-join vs seen (J1) │
     frontier_{r+1} = min-(depth,parent) merge(children ∪ deferred)  (A5)
     manifest commit = checkpoint
@@ -30,7 +30,8 @@ re-joins); per-round metrics are buffered into the manifest and written as a
 table once at the end. Each write still runs several Spark jobs (AQE query
 stages, the dequeue windows, the children pipeline): traced crawlbench runs
 count ~12 jobs per round on wide-bfs and ~29 on polite-deep
-(``rounds.spark_jobs_per_round``, seed 101, local[4]).
+(``rounds.spark_jobs_per_round``, seed 101, local[4], 4 vCPUs); of the
+round's Python stages only the fused fetch pass touches links.
 
 Determinism: every output table has an order-insensitive definition; the
 recorded crawl ordering (W3) is ``row_number() OVER (PARTITION BY host ORDER
@@ -41,12 +42,12 @@ which is the two-cluster-size check's requirement (§4.2.4).
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..operators.canonicalize import with_canonical
+from ..operators.canonicalize import with_canonical, with_url_columns
 from ..operators.fetch import fetch_process
 from ..operators.matchers import conjunction
 from ..operators.politeness import dequeue
@@ -66,6 +67,8 @@ _OUTCOMES = ("ok", "matcher", "fetch_error")
 # round is fine up to a few hundred MB; past this the partitioned probe tier
 # is the only shape that doesn't ship the filter to every executor per round
 BROADCAST_SAFE_BLOOM_BYTES = 256 << 20
+# modulus of the fetched table's host_bucket column
+N_HOST_BUCKETS = 64
 
 
 def _frontier_arrow_schema(frontier_df):
@@ -124,7 +127,8 @@ class CrawlConfig:
     # (tianalyser/linkextractor.go:33-53)
     scope_path_includes: tuple[str, ...] = ()
     # X2 — custom (base_url, body_html) -> list[str] extractor; overrides the
-    # scope knobs above when set (reference LinkExtractor field)
+    # scope knobs above when set (reference LinkExtractor field); links must
+    # be canonical, so the engine wraps it in extract.canonicalizing
     extractor: object | None = None
     matchers: tuple[str, ...] = ("html",)
     # S2 live mode: an operators.fetch.HttpConfig switches the fused fetch
@@ -139,7 +143,6 @@ class CrawlConfig:
     # re-reads, never re-fetches)
     live_robots: bool = False
     salt_buckets: int = 16
-    n_host_buckets: int = 64
     bloom_capacity: int = 1 << 20
     bloom_fpr: float = 1e-3
     bloom_segments: int = 32
@@ -163,7 +166,6 @@ class CrawlConfig:
     # maybe-seen survivors — opt-in diagnostics, not a production default
     instrument_bloom: bool = False
     max_rounds: int = 10_000
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         if self.bloom_mode not in ("auto", "broadcast", "partitioned"):
@@ -230,7 +232,11 @@ class CrawlEngine:
         # trusted): skip the bloom tier entirely — every child goes through
         # the exact anti-join, correct at any geometry, just shuffle-heavier
         self._exact_only = False
-        from ..operators.extract import expand_blacklist_www, make_scoped_extractor
+        from ..operators.extract import (
+            canonicalizing,
+            expand_blacklist_www,
+            make_scoped_extractor,
+        )
 
         self._blacklist = (
             expand_blacklist_www(config.blacklist_hosts)
@@ -249,12 +255,9 @@ class CrawlEngine:
         # (host, cap) dim from robots crawl_delay_ms — None when no host has
         # a positive delay, so the default path pays no extra join
         self._delay_caps = self._delay_caps_from(self.robots)
-        self._extractor = config.extractor
-        if self._extractor is None and (
-            config.blacklist_substrings
-            or config.scope_same_host
-            or config.scope_path_includes
-        ):
+        if config.extractor is not None:
+            self._extractor = canonicalizing(config.extractor)
+        else:
             self._extractor = make_scoped_extractor(
                 blacklist=self._blacklist,
                 blacklist_substrings=tuple(config.blacklist_substrings),
@@ -330,19 +333,22 @@ class CrawlEngine:
             "url", "fmt", *VALIDATION_COL_NAMES, "round_id"
         )
 
-    def metrics_df(self) -> DataFrame | None:
+    def _metrics_pdf(self):
+        """METRIC_KEYS frame of the manifest's rounds that dequeued, or None."""
         import pandas as pd
 
         man = self.cat.manifest() or {}
         rows = [m for m in man.get("metrics", []) if m.get("dequeued", 0) > 0]
         if not rows:
             return None
+        return pd.DataFrame([{k: m.get(k) for k in METRIC_KEYS} for m in rows])
+
+    def metrics_df(self) -> DataFrame | None:
+        pdf = self._metrics_pdf()
         # pandas → Arrow path: the DF is JVM-local, so downstream jobs over it
         # never spawn a Python-runner task (a list-of-dicts createDataFrame
         # cost ~4 s per tiny job in worker spin-up)
-        return self.spark.createDataFrame(
-            pd.DataFrame([{k: m.get(k) for k in METRIC_KEYS} for m in rows])
-        )
+        return None if pdf is None else self.spark.createDataFrame(pdf)
 
     # ------------------------------------------------------------------ setup
     def init_frontier(self, seeds: DataFrame) -> None:
@@ -509,7 +515,7 @@ class CrawlEngine:
             .withColumn("round_id", F.lit(r))
             .withColumn(
                 "host_bucket",
-                F.pmod(F.xxhash64("host"), F.lit(cfg.n_host_buckets)).cast("int"),
+                F.pmod(F.xxhash64("host"), F.lit(N_HOST_BUCKETS)).cast("int"),
             )
         )
         # outcome counts + min depth ride the write job as observed metrics
@@ -581,8 +587,8 @@ class CrawlEngine:
 
         frontier_cols = ["url", "host", "path", "url_sha1", "depth", "parent", "priority"]
         depth_cap = cfg.max_depth - 1  # crawler.go:59
-        # skip the whole children pipeline (explode → canon UDF → robots →
-        # bloom → anti-join) when no dequeued row can spawn — the depth-capped
+        # skip the whole children pipeline (explode → robots → bloom →
+        # anti-join) when no dequeued row can spawn — the depth-capped
         # final round otherwise pays several seconds of dead plan
         can_spawn = (
             dequeued_n > 0 and min_depth is not None and min_depth + 1 <= depth_cap
@@ -602,7 +608,7 @@ class CrawlEngine:
                     "priority",
                 )
             )
-            children = with_canonical(children)  # idempotent; adds host/path/sha1
+            children = with_url_columns(children)  # links are canonical
             if cfg.live_robots:
                 # fetch rules for hosts first seen among this round's
                 # children BEFORE they are gated / enter frontier r+1
@@ -611,8 +617,8 @@ class CrawlEngine:
             # persist: the bloom split consumes children in two branches
             # (definitely-new bypasses the anti-join shuffle, maybe-seen goes
             # through it) and the FP instrumentation in a third — without the
-            # cache each traversal recomputes explode → canon UDF → robots
-            # from the fetched parquet
+            # cache each traversal re-reads the fetched parquet and recomputes
+            # explode → sha1 → robots join
             children = children.persist()
 
             seen_all = self.seen_urls(up_to_round=r)
@@ -677,13 +683,11 @@ class CrawlEngine:
         curve."""
         import os
 
-        import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        man = self.cat.manifest() or {}
-        rows = [m for m in man.get("metrics", []) if m.get("dequeued", 0) > 0]
-        if not rows:
+        pdf = self._metrics_pdf()
+        if pdf is None:
             return
         out = f"{self.cat.state_dir}/metrics_table"
         os.makedirs(out, exist_ok=True)
@@ -692,7 +696,6 @@ class CrawlEngine:
         for f in os.listdir(out):
             if f.endswith(".parquet"):
                 os.remove(os.path.join(out, f))
-        pdf = pd.DataFrame([{k: m.get(k) for k in METRIC_KEYS} for m in rows])
         pq.write_table(
             pa.Table.from_pandas(pdf, preserve_index=False),
             os.path.join(out, "part-00000.parquet"),

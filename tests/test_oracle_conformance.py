@@ -196,11 +196,13 @@ def test_custom_extractor_plug_point(spark, tiny_web, tmp_path):
     """X2 — a user extractor (reference LinkExtractor field,
     linkextractor.go:14) plugs into the engine end-to-end: here one that
     keeps only even-numbered pages."""
-    from cs3103_gocrawler_spark.operators.extract import extract_links_py
+    from cs3103_gocrawler_spark.operators.extract import make_scoped_extractor
+
+    extract_all = make_scoped_extractor()
 
     def even_pages_only(base_url, body_html):
         return [
-            u for u in extract_links_py(base_url, body_html, frozenset())
+            u for u in extract_all(base_url, body_html)
             if int(u.rsplit("/", 1)[1]) % 2 == 0
         ]
 
