@@ -6,7 +6,7 @@ SURVEY.md §2 plus the training-data pipeline ops, each with an ANSI-SQL twin
 DuckDB runs on the same parquet (rows-only for pandas-UDF pipelines).
 
 The registry lives in cs3103_gocrawler_spark/plans/generic_queries.py; the
-crawl engine itself (frontier rounds, politeness, bloom seen-set, payload
+crawl engine itself (frontier rounds, politeness, exact seen-set, payload
 validation, checkpoint/resume) is conformance-tested against a sequential
 oracle in tests/ — see tests/test_oracle_conformance.py.
 """

@@ -13,7 +13,7 @@ synthetic/   deterministic seeded web generator (pages+edges+seeds+robots)
 oracle/      sequential pure-Python oracle of the reference BFS semantics —
              the definition of "correct" for conformance tests (SURVEY §5.2.2)
 operators/   the crawl's Spark operators: canonicalize (U1), seen-set
-             bloom+anti-join (J1), politeness window-rank dequeue (W2), link
+             exact anti-join (J1), politeness window-rank dequeue (W2), link
              extraction (U3/X1), fused fetch (J4/U2), matchers (P1-P6),
              payload validation (U4/X5), robots (live mode), the X4
              table scrape of the reference's tianalyser, and the

@@ -89,6 +89,6 @@ def split_canonical(cu: str) -> tuple[str, str]:
 
 def sha1_64(s: str) -> int:
     """First 8 bytes of SHA1(s) as signed int64 — the url_sha1 key used for
-    the bloom seen-set, salting, and bucketing (SURVEY.md F11)."""
+    dequeue salting (SURVEY.md F11)."""
     d = hashlib.sha1(s.encode("utf-8")).digest()
     return int.from_bytes(d[:8], "big", signed=True)

@@ -1,38 +1,26 @@
-"""J1 — the URL-seen set: bloom pre-filter + exact anti-join.
+"""J1 — the URL-seen set.
 
 Reference: the load-bearing ``VisitedPageInfo`` membership probes
-(crawler.go:74-79, 97-102). Two tiers (SURVEY.md §2.3 J1):
+(crawler.go:74-79, 97-102), an exact map lookup. The engine uses only the
+exact tier: ``filter_unseen(spark, children, seen, None)`` is one
+``left_anti`` join on the url string against the seen table (the fetched
+table's ``url`` column), exact regardless of hash collisions.
 
-tier 1  bloom filter over url_sha1 (int64) — kills shuffle volume:
-        candidates the bloom rejects are *definitely unseen* and skip the
-        anti-join entirely; only maybe-seen rows shuffle.
-tier 2  exact ``left_anti`` join on the url string against the seen table —
-        guarantees exactness regardless of bloom FPR (and of the ~3 expected
-        64-bit hash collisions at 10^10 URLs).
+Everything else here — the segmented ``Bloom``, ``build_round_state``,
+``build_bloom_distributed``, ``probe_with_segments`` and the bloom branches
+of ``filter_unseen`` — is a library the engine no longer calls. It is kept
+for crawlbench's ``filter_unseen`` replay until ROADMAP item 2 moves the
+benchmark off it. A bloom tier in front of an anti-join that runs every
+round anyway never paid: on polite-deep it cost two Python stages and a
+table write per round and rejected no false positive (CHANGES.md).
 
-The bloom is SEGMENTED: key ``h`` lives entirely inside segment ``pmod(h, S)``,
-whose bit array is an independent ``m_seg``-bit bloom. That makes the
-per-round build one Spark action, not a driver loop (``build_round_state``):
-
-    fetched Δ ──repartition(S, pmod(url_sha1, S))──► mapInPandas builds each
-    segment's bitmap where its rows live ──► ≤ S (seg, bitmap, n_rows) rows
-
-Driver traffic per round is O(filter size), independent of row count.
-Where those segment rows go picks the probe tier behind ``filter_unseen``:
-
-broadcast  (the engine's "auto" mode resolves here below a 256 MB filter)
-           the driver collects the segment rows, ORs them into one bit array
-           and broadcasts it; probing is a vectorized pandas UDF. Broadcast
-           volume = filter size per probing round — fine up to a few hundred
-           MB, pathological at north_rule scale (10^10 URLs at fpr 1e-3 ≈
-           17 GB). Resume rebuilds the array from the fetched table
-           (``build_bloom_distributed``).
-partitioned  (scale path) the segment rows are *written* as a
-           ``bloom_segments`` per-round delta table; the probe routes
-           candidates by ``pmod(url_sha1, S)`` and cogroups them with the
-           segment bitmaps (``probe_with_segments``) — the bit array never
-           exists in driver memory and never crosses the driver at all.
-           Resume needs no rebuild because the segment table persists.
+Library shape, for that replay: key ``h`` lives entirely inside segment
+``pmod(h, S)``, whose bit array is an independent ``m_seg``-bit bloom.
+``build_round_state`` routes the sha1s by segment and builds each
+segment's bitmap executor-side in one Spark action; the ≤ S
+``(seg, bitmap, n_rows)`` rows are either collected into a driver bit
+array (broadcast probe, a pandas UDF) or written as a ``bloom_segments``
+table and probed by a cogroup on the segment key (``probe_with_segments``).
 """
 
 from __future__ import annotations

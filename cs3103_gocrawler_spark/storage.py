@@ -165,7 +165,10 @@ class RoundCatalog:
         (pyarrow's ``get_field_index`` returns -1, it does not raise) or when
         ANY row group lacks min/max stats — a partial min over only the row
         groups that happen to carry stats could overstate the true minimum,
-        and callers use this value to skip work (e.g. the bloom build gate)."""
+        and a caller that skips work on it would skip too much.
+
+        Kept for crawlbench until ROADMAP item 2: its tracer wraps this
+        method by name; the engine no longer calls it."""
         import pyarrow.parquet as pq
 
         p = self.path(kind, round_id)

@@ -13,25 +13,27 @@ One round replaces one wave of the reference's goroutine tree
             → write fetched_r                               │
                        ↑ the ONE materialization point      │
     children = explode(links) → url columns on the JVM      │
-             → robots gate → bloom + anti-join vs seen (J1) │
+             → robots gate → exact anti-join vs seen (J1)   │
     frontier_{r+1} = min-(depth,parent) merge(children ∪ deferred)  (A5)
     manifest commit = checkpoint
 
-Job discipline: the round's per-URL work rides a few writes — the fetched
-write (outcome counts and min depth ride it as ``Observation`` metrics), the
-bloom segment build (seen.build_round_state: one action; the driver receives
-at most bloom-sized segment rows, never per-URL rows) and the frontier write.
-Row counts come from parquet footer metadata on the driver (Iceberg:
-snapshot summaries), not count() jobs. visited/rejected/seen/validation are
-*views* over the fetched table (column-pruned, predicate-filtered parquet
-reads), not extra materializations; payload validation runs inside the
-fetch pass (the payload reaches a Python worker exactly once and never
-re-joins); per-round metrics are buffered into the manifest and written as a
-table once at the end. Each write still runs several Spark jobs (AQE query
-stages, the dequeue windows, the children pipeline): traced crawlbench runs
-count ~12 jobs per round on wide-bfs and ~29 on polite-deep
-(``rounds.spark_jobs_per_round``, seed 101, local[4], 4 vCPUs); of the
-round's Python stages only the fused fetch pass touches links.
+Job discipline: the round's per-URL work rides two writes — the fetched
+write (outcome counts and min depth ride it as ``Observation`` metrics) and
+the frontier write, whose plan holds the children pipeline and the seen
+filter: one exact ``left_anti`` join against the fetched table's urls, with
+no bloom build, probe or extra table. Row counts come from parquet footer
+metadata on the driver (Iceberg: snapshot summaries), not count() jobs.
+visited/rejected/seen/validation are *views* over the fetched table
+(column-pruned, predicate-filtered parquet reads), not extra
+materializations; payload validation runs inside the fetch pass (the payload
+reaches a Python worker exactly once and never re-joins); per-round metrics
+are buffered into the manifest and written as a table once at the end. Each
+write still runs several Spark jobs (AQE query stages, the dequeue windows,
+the children pipeline): traced crawlbench runs count ~7 jobs per round on
+wide-bfs and ~17 on polite-deep (``rounds.spark_jobs_per_round``, seed 101,
+local[4], 4 vCPUs). Outside live-robots mode, which fetches new hosts'
+robots.txt in its own pass, the fused fetch pass is the round's only
+Python stage.
 
 Determinism: every output table has an order-insensitive definition; the
 recorded crawl ordering (W3) is ``row_number() OVER (PARTITION BY host ORDER
@@ -51,22 +53,16 @@ from ..operators.canonicalize import with_canonical, with_url_columns
 from ..operators.fetch import fetch_process
 from ..operators.matchers import conjunction
 from ..operators.politeness import dequeue
-from ..operators.seen import (
-    Bloom,
-    build_bloom_distributed,
-    build_round_state,
-    filter_unseen,
-)
+from ..operators.seen import filter_unseen
+# the engine calls neither; kept for crawlbench until ROADMAP item 2
+# (its tracer wraps both names in this module and raises on a missing one)
+from ..operators.seen import build_bloom_distributed, build_round_state  # noqa: F401
 
 from ..operators.validate import VALIDATION_COL_NAMES
 from ..storage import RoundCatalog
 
 _OUTCOMES = ("ok", "matcher", "fetch_error")
 
-# bloom_mode="auto" cutover: broadcast of the whole bit array per probing
-# round is fine up to a few hundred MB; past this the partitioned probe tier
-# is the only shape that doesn't ship the filter to every executor per round
-BROADCAST_SAFE_BLOOM_BYTES = 256 << 20
 # modulus of the fetched table's host_bucket column
 N_HOST_BUCKETS = 64
 
@@ -88,7 +84,7 @@ VISITED_COLS = [
 
 METRIC_KEYS = [
     "round_id", "pending", "dequeued", "fetched_ok", "rejected",
-    "new_urls", "deferred", "bloom_fp", "elapsed_ms",
+    "new_urls", "deferred", "elapsed_ms",
 ]
 
 
@@ -143,33 +139,20 @@ class CrawlConfig:
     # re-reads, never re-fetches)
     live_robots: bool = False
     salt_buckets: int = 16
+    # kept for crawlbench until ROADMAP item 2: its workloads set these and
+    # its filter_unseen replay reads them; the engine reads none of them
+    # (the round's seen filter is the exact anti-join alone)
     bloom_capacity: int = 1 << 20
     bloom_fpr: float = 1e-3
     bloom_segments: int = 32
-    # "auto" (default): partitioned when the filter geometry
-    #   (seg_bytes × n_segments) exceeds BROADCAST_SAFE_BLOOM_BYTES,
-    #   broadcast otherwise — the scale-safe default.
-    # "broadcast": driver ORs segment deltas into one array and broadcasts it
-    #   per probing round — fine up to a few hundred MB of filter.
-    # "partitioned": the scale path — segment bitmaps persist as the
-    #   bloom_segments delta table and the probe is a co-partitioned cogroup
-    #   (seen.probe_with_segments); the bit array never exists driver-side
-    #   and resume needs no bloom rebuild. At north_rule scale (10^10 URLs,
-    #   fpr 1e-3 ≈ 17 GB of filter) this is the only viable mode.
     bloom_mode: str = "auto"
-    # partitioned-probe cogroup salt: parallelism = n_segments × this, and
-    # per-task pandas buffer = candidates/(n_segments × this) (seen.py)
     bloom_probe_salt: int = 8
+    instrument_bloom: bool = False
     gen_seed: int = 42
     validate: bool = False
-    # bloom-FP instrumentation costs one extra count() job per round over the
-    # maybe-seen survivors — opt-in diagnostics, not a production default
-    instrument_bloom: bool = False
     max_rounds: int = 10_000
 
     def __post_init__(self) -> None:
-        if self.bloom_mode not in ("auto", "broadcast", "partitioned"):
-            raise ValueError(f"unknown bloom_mode: {self.bloom_mode!r}")
         if self.live_robots and self.http is None:
             raise ValueError(
                 "live_robots=True requires an HttpConfig (robots.txt is "
@@ -213,25 +196,9 @@ class CrawlEngine:
         self.cfg = config
         self.cat = RoundCatalog(spark, state_dir)
         self.robots = robots
-        self.bloom = Bloom(
-            config.bloom_capacity, config.bloom_fpr,
-            n_segments=config.bloom_segments,
-        )
-        # bloom_mode resolution (the "auto" cutover): the filter's total
-        # geometry decides whether a per-round broadcast of the bit array is
-        # affordable — the resolved mode (not the config string) is what the
-        # engine uses and what the manifest records for resume validation
+        # kept for crawlbench until ROADMAP item 2: its filter_unseen replay
+        # reads it; the engine does not
         self.bloom_mode = config.bloom_mode
-        if self.bloom_mode == "auto":
-            self.bloom_mode = (
-                "partitioned"
-                if self.bloom.seg_bytes * self.bloom.s > BROADCAST_SAFE_BLOOM_BYTES
-                else "broadcast"
-            )
-        # safety fallback (set on resume when persisted bloom state can't be
-        # trusted): skip the bloom tier entirely — every child goes through
-        # the exact anti-join, correct at any geometry, just shuffle-heavier
-        self._exact_only = False
         from ..operators.extract import (
             canonicalizing,
             expand_blacklist_www,
@@ -281,20 +248,6 @@ class CrawlEngine:
             ).cast("int").alias("cap"),
         )
         return caps if caps.limit(1).count() > 0 else None
-
-    def _bloom_record(self) -> dict:
-        """Filter identity persisted in the manifest: probing persisted
-        segment bitmaps with a different geometry (m_seg, k, s) silently
-        treats every candidate as unseen — the resume path validates this
-        record before trusting the bloom_segments table."""
-        if self._exact_only:
-            return {"mode": "exact"}
-        return {
-            "mode": self.bloom_mode,
-            "m_seg": int(self.bloom.m_seg),
-            "k": int(self.bloom.k),
-            "s": int(self.bloom.s),
-        }
 
     # -------------------------------------------------------------- views
     def fetched_df(self, up_to_round: int | None = None) -> DataFrame | None:
@@ -364,7 +317,7 @@ class CrawlEngine:
         f = self._robots_gate(f)
         f = self._min_merge(f)
         self.cat.write(f, "frontier", 0)
-        self.cat.commit_round(-1, {"metrics": [], "bloom": self._bloom_record()})
+        self.cat.commit_round(-1, {"metrics": []})
 
     @staticmethod
     def _min_merge(df: DataFrame) -> DataFrame:
@@ -542,34 +495,6 @@ class CrawlEngine:
         dequeued_n = sum(outcome_counts.values())
         processed = self.cat.read("fetched", r)
 
-        # executor-side bloom delta: routes the round's url_sha1s by segment
-        # and builds each segment's bitmap where the rows live — the driver
-        # receives bloom-sized segment rows (broadcast mode) or nothing at
-        # all (partitioned mode: bitmaps go executor→parquet and the probe
-        # cogroups against them). The old full-result toPandas here was the
-        # serial fraction that flattened 8→32-core scaling to 0.361.
-        # Once the frontier's min depth (free from parquet footer stats) can
-        # no longer spawn, no future round probes the bloom — min-depth is
-        # monotone across rounds — so the segment build is skipped entirely.
-        pending_min_depth = self.cat.column_min("frontier", r, "depth")
-        depth_cap_pre = cfg.max_depth - 1
-        # fail CLOSED when stats are unavailable (column_min → None on any
-        # stats-less row group): skipping the bloom build on an unknown min
-        # would leave this round's sha1s out of the filter while filter_unseen
-        # treats not-in-bloom as definitively unseen — re-crawled URLs
-        bloom_needed = (
-            pending_min_depth is None
-            or int(pending_min_depth) + 1 <= depth_cap_pre
-        )
-        if bloom_needed and dequeued_n > 0 and not self._exact_only:
-            build_round_state(
-                processed, self.bloom,
-                segments_sink=(
-                    (self.cat, r) if self.bloom_mode == "partitioned" else None
-                ),
-            )
-        _mark("round_state")
-
         if allowance is not None:
             # balance' = min(allowance − dequeued, budget) per host — the
             # bucket refills by one budget per round, stores at most one
@@ -587,15 +512,12 @@ class CrawlEngine:
 
         frontier_cols = ["url", "host", "path", "url_sha1", "depth", "parent", "priority"]
         depth_cap = cfg.max_depth - 1  # crawler.go:59
-        # skip the whole children pipeline (explode → robots → bloom →
-        # anti-join) when no dequeued row can spawn — the depth-capped
-        # final round otherwise pays several seconds of dead plan
+        # skip the whole children pipeline (explode → robots → anti-join)
+        # when no dequeued row can spawn — the depth-capped final round
+        # otherwise pays several seconds of dead plan
         can_spawn = (
             dequeued_n > 0 and min_depth is not None and min_depth + 1 <= depth_cap
         )
-        # instrumented-but-no-children-pipeline is a real 0 (nothing was
-        # bloom-filtered), distinct from the -1 "not instrumented" sentinel
-        bloom_fp_n = 0 if cfg.instrument_bloom else -1
         if can_spawn:
             # children: J5 edge construction — parent rides the row, no join needed
             visited_r = processed.filter(F.col("outcome") == "ok")
@@ -614,29 +536,13 @@ class CrawlEngine:
                 # children BEFORE they are gated / enter frontier r+1
                 self._refresh_live_robots(children, r + 1)
             children = self._robots_gate(children)
-            # persist: the bloom split consumes children in two branches
-            # (definitely-new bypasses the anti-join shuffle, maybe-seen goes
-            # through it) and the FP instrumentation in a third — without the
-            # cache each traversal re-reads the fetched parquet and recomputes
-            # explode → sha1 → robots join
-            children = children.persist()
-
-            seen_all = self.seen_urls(up_to_round=r)
-            segments = (
-                self.cat.read_all("bloom_segments", up_to_round=r)
-                if self.bloom_mode == "partitioned" and not self._exact_only
-                else None
+            # no persist: the frontier write below is the children's only
+            # reader (live robots reads the ungated children in its own job)
+            unseen, _ = filter_unseen(
+                self.spark, children, self.seen_urls(up_to_round=r), None
             )
-            unseen, bloom_fps = filter_unseen(
-                self.spark, children, seen_all,
-                None if self._exact_only else self.bloom,
-                segments=segments, probe_salt=cfg.bloom_probe_salt,
-            )
-            if cfg.instrument_bloom:
-                bloom_fp_n = bloom_fps.count()  # extra job: instrumentation only
             merged = unseen.select(*frontier_cols).unionByName(deferred.select(*frontier_cols))
         else:
-            children = None
             merged = None if deferred_static_empty else deferred.select(*frontier_cols)
         if merged is None:
             # nothing can reach frontier r+1 (no spawns, deferred provably
@@ -646,8 +552,6 @@ class CrawlEngine:
             self.cat.write_empty("frontier", r + 1, _frontier_arrow_schema(pending))
         else:
             self.cat.write(self._min_merge(merged), "frontier", r + 1)
-        if children is not None:
-            children.unpersist()
         _mark("frontier_write")
         next_n = self.cat.count("frontier", r + 1)
         _mark("frontier_count")
@@ -663,14 +567,11 @@ class CrawlEngine:
             ),
             "new_urls": int(next_n - deferred_n),
             "deferred": int(deferred_n),
-            "bloom_fp": int(bloom_fp_n),
             "elapsed_ms": int((time.monotonic() - t0) * 1000),
         }
         man = self.cat.manifest() or {"metrics": []}
         metrics = [x for x in man.get("metrics", []) if x["round_id"] < r] + [m]
-        self.cat.commit_round(
-            r, {"metrics": metrics, "bloom": self._bloom_record()}
-        )
+        self.cat.commit_round(r, {"metrics": metrics})
         _mark("commit")
         return {**m, "terminated": next_n == 0, "timings": timings}
 
@@ -711,44 +612,9 @@ class CrawlEngine:
             raise RuntimeError("call init_frontier(seeds) first")
         start = man["last_round"] + 1
         if resume and start > 0:
+            # the seen set is the fetched table itself, so nothing is rebuilt;
+            # a bloom_segments table left by an older engine is never read
             self.cat.drop_rounds_after(man["last_round"])
-            if self.bloom_mode == "partitioned":
-                # the probe trusts the persisted bloom_segments table, so its
-                # recorded identity must match this engine's filter EXACTLY:
-                # probing old bitmaps with a different (m_seg, k, s) — or a
-                # table written by a broadcast-mode crawl, which never wrote
-                # segments at all — returns false "definitely unseen" verdicts
-                # that BYPASS the exact anti-join (re-crawled URLs, silent
-                # seen-set break)
-                rec = man.get("bloom")
-                cur = self._bloom_record()
-                if rec is None or rec.get("mode") == "exact":
-                    # pre-geometry-manifest checkpoint (or a crawl that
-                    # already fell back): segment coverage of rounds 0..N
-                    # cannot be proven — fall back to the exact anti-join,
-                    # correct at any geometry, for the rest of this crawl
-                    self._exact_only = True
-                elif rec != cur:
-                    raise RuntimeError(
-                        "bloom geometry mismatch on resume: checkpoint has "
-                        f"{rec}, this engine has {cur} — resume with the "
-                        "original bloom_mode/bloom_capacity/bloom_fpr/"
-                        "bloom_segments config (probing persisted segment "
-                        "bitmaps with a different geometry silently "
-                        "re-crawls seen URLs)"
-                    )
-                # else: nothing to rebuild — the bloom_segments delta table
-                # survived the restart and the probe reads it directly;
-                # resume cost is O(1) in visited-set size (vs the broadcast
-                # mode's full re-scan below)
-            else:
-                seen = self.fetched_df(up_to_round=man["last_round"])
-                if seen is not None:
-                    # same executor-side segment build as the round path —
-                    # the driver never pulls the seen sha1s (geometry needs
-                    # no validation here: the rebuild uses THIS engine's
-                    # filter, not persisted bitmaps)
-                    build_bloom_distributed(seen.select("url_sha1"), self.bloom)
         history: list[dict] = []
         for r in range(start, self.cfg.max_rounds):
             m = self._run_round(r)

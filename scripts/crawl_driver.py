@@ -56,13 +56,6 @@ def main() -> None:
     ap.add_argument("--round-target-ms", type=int, default=1000,
                     help="round time target for crawl_delay caps "
                          "(take = max(1, target // delay))")
-    ap.add_argument("--bloom-mode", choices=("auto", "broadcast", "partitioned"),
-                    default="auto",
-                    help="URL-seen probe tier: broadcast bit array, the "
-                         "persisted-segment co-partitioned probe (scale "
-                         "path, O(1) driver memory), or auto (default) — "
-                         "partitioned once the filter outgrows a "
-                         "broadcast-safe ~256 MB")
     ap.add_argument("--validate", action="store_true", help="inline payload validation (X5)")
     ap.add_argument("--resume", action="store_true", help="resume from last committed round")
     ap.add_argument("--report", default=None, help="write the JSON crawl report here (S7)")
@@ -109,7 +102,6 @@ def main() -> None:
         scope_path_includes=tuple(p for p in args.path_includes.split(",") if p),
         validate=args.validate,
         gen_seed=args.seed,
-        bloom_mode=args.bloom_mode,
         round_target_ms=args.round_target_ms,
     )
     robots_df = (

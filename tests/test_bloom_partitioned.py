@@ -1,6 +1,10 @@
 """Partitioned bloom probe (scale path): persisted segment table + cogroup
 probe must equal the broadcast path bit-for-bit, with NO driver-side bit
-array and no sparkContext.broadcast of it (VERDICT r2 'what's wrong' #1)."""
+array and no sparkContext.broadcast of it (VERDICT r2 'what's wrong' #1).
+
+The engine's seen filter is the exact anti-join alone, so the crawl-level
+tests below check resume and visited-set equality in every bloom_mode, and
+that no round or resume builds, writes or reads a bloom."""
 
 import numpy as np
 import pytest
@@ -126,7 +130,7 @@ def test_engine_partitioned_mode_matches_broadcast(spark, crawl_inputs, tmp_path
 
 def test_partitioned_resume_no_rebuild(spark, crawl_inputs, tmp_path):
     """Kill after round 1, resume in partitioned mode: final state identical
-    to uninterrupted, and the driver bloom stays empty (no rebuild scan)."""
+    to uninterrupted."""
     pages, seeds = crawl_inputs
     base = dict(max_depth=4, budget_per_host=3, bloom_capacity=1 << 14,
                 bloom_segments=8, bloom_mode="partitioned")
@@ -142,7 +146,6 @@ def test_partitioned_resume_no_rebuild(spark, crawl_inputs, tmp_path):
     resumed = CrawlEngine(spark, pages, CrawlConfig(**base),
                           str(tmp_path / "interrupted"))
     resumed.run(resume=True)
-    assert resumed.bloom.n_added == 0
     assert _visited_key(resumed) == _visited_key(full)
 
 
@@ -169,51 +172,9 @@ def test_partitioned_probe_salt_invariant(spark, tmp_path, salt):
     assert (flagged["_maybe"].to_numpy() == expect).all()
 
 
-def test_bloom_auto_mode_cutover(spark, crawl_inputs, tmp_path):
-    """bloom_mode='auto' resolves by filter geometry: small filters
-    broadcast, filters past the ~256 MB broadcast-safe threshold go
-    partitioned — and the driver never allocates the partitioned array."""
-    pages, _ = crawl_inputs
-    small = CrawlEngine(
-        spark, pages, CrawlConfig(bloom_capacity=1 << 14), str(tmp_path / "s")
-    )
-    assert small.cfg.bloom_mode == "auto"
-    assert small.bloom_mode == "broadcast"
-
-    big = CrawlEngine(
-        spark, pages,
-        CrawlConfig(bloom_capacity=1 << 31, bloom_segments=32),
-        str(tmp_path / "b"),
-    )
-    assert big.bloom_mode == "partitioned"
-    assert big.bloom.seg_bytes * big.bloom.s > (256 << 20)
-    assert big.bloom._bits is None  # lazy: geometry only, no driver array
-
-
-def test_resume_geometry_mismatch_raises(spark, crawl_inputs, tmp_path):
-    """Resuming a partitioned crawl with changed filter geometry must fail
-    loudly — probing old bitmaps with new (m_seg, k, s) silently re-crawls
-    seen URLs (ADVICE r3, medium)."""
-    pages, seeds = crawl_inputs
-    base = dict(max_depth=4, budget_per_host=3, bloom_capacity=1 << 14,
-                bloom_mode="partitioned")
-    eng = CrawlEngine(spark, pages,
-                      CrawlConfig(max_rounds=2, bloom_segments=8, **base),
-                      str(tmp_path / "st"))
-    eng.init_frontier(seeds)
-    eng.run()
-    bad = CrawlEngine(spark, pages,
-                      CrawlConfig(bloom_segments=16, **base),
-                      str(tmp_path / "st"))
-    with pytest.raises(RuntimeError, match="bloom geometry mismatch"):
-        bad.run(resume=True)
-
-
 def test_resume_without_bloom_record_falls_back_exact(spark, crawl_inputs, tmp_path):
-    """A checkpoint whose manifest carries no bloom record (pre-r4, or an
-    unknown-mode crawl) cannot prove segment coverage: the resumed engine
-    must drop to the exact anti-join and still finish with the correct
-    visited set."""
+    """A checkpoint whose manifest carries no bloom record resumes to the
+    uninterrupted crawl's visited set."""
     import json
     import os
 
@@ -238,5 +199,124 @@ def test_resume_without_bloom_record_falls_back_exact(spark, crawl_inputs, tmp_p
 
     resumed = CrawlEngine(spark, pages, CrawlConfig(**base), str(tmp_path / "old"))
     resumed.run(resume=True)
-    assert resumed._exact_only
     assert _visited_key(resumed) == _visited_key(full)
+
+
+def _crawl_order_key(eng):
+    from cs3103_gocrawler_spark.plans.report import crawl_order
+
+    return sorted(
+        (r.host, r.seq, r.url)
+        for r in crawl_order(eng.visited_df()).select("host", "seq", "url").collect()
+    )
+
+
+_RESUME_BASE = dict(max_depth=4, budget_per_host=3, bloom_capacity=1 << 14,
+                    bloom_segments=8, bloom_mode="partitioned")
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, crawl_inputs, tmp_path_factory):
+    """The uninterrupted crawl the resume tests below compare against."""
+    pages, seeds = crawl_inputs
+    eng = CrawlEngine(spark, pages, CrawlConfig(**_RESUME_BASE),
+                      str(tmp_path_factory.mktemp("uninterrupted")))
+    eng.init_frontier(seeds)
+    eng.run()
+    return eng
+
+
+def _interrupted(spark, crawl_inputs, state, **cfg):
+    """Two committed rounds of the resume tests' crawl in ``state``."""
+    pages, seeds = crawl_inputs
+    eng = CrawlEngine(spark, pages, CrawlConfig(**{**_RESUME_BASE, **cfg},
+                                                max_rounds=2), state)
+    eng.init_frontier(seeds)
+    return eng.run()
+
+
+def test_engine_never_builds_or_probes_bloom(spark, crawl_inputs, uninterrupted,
+                                             tmp_path, monkeypatch):
+    """The round's seen filter is the exact anti-join alone: neither a round
+    nor a resume builds a bloom, no bloom_segments table is written, and the
+    resumed crawl equals the uninterrupted one — in every bloom_mode."""
+    import os
+
+    from cs3103_gocrawler_spark.streaming import rounds
+
+    calls = {"build_round_state": 0, "build_bloom_distributed": 0}
+    for name in calls:
+        orig = getattr(rounds, name)
+
+        def counting(*a, _orig=orig, _name=name, **kw):
+            calls[_name] += 1
+            return _orig(*a, **kw)
+
+        monkeypatch.setattr(rounds, name, counting)
+
+    pages, _ = crawl_inputs
+    for mode in ("broadcast", "partitioned"):
+        state = str(tmp_path / mode)
+        hist = _interrupted(spark, crawl_inputs, state, bloom_mode=mode)
+        resumed = CrawlEngine(
+            spark, pages, CrawlConfig(**{**_RESUME_BASE, "bloom_mode": mode}), state
+        )
+        hist += resumed.run(resume=True)
+        assert sum(1 for h in hist if h.get("dequeued")) >= 3
+
+        assert calls == {"build_round_state": 0, "build_bloom_distributed": 0}
+        assert not os.path.exists(os.path.join(state, "bloom_segments"))
+        assert _visited_key(resumed) == _visited_key(uninterrupted)
+    assert not os.path.exists(
+        os.path.join(uninterrupted.cat.state_dir, "bloom_segments")
+    )
+
+
+def test_resume_from_bloom_era_checkpoint(spark, crawl_inputs, uninterrupted,
+                                          tmp_path, monkeypatch):
+    """A state dir written by an engine that still kept a partitioned bloom
+    — a geometry record in the manifest and a bloom_segments table on disk —
+    resumes to the uninterrupted crawl's visited set and per-host order
+    without reading the stale segment table (its bitmaps here are all zero:
+    a probe that trusted them would call every seen URL new)."""
+    import json
+    import os
+
+    state = str(tmp_path / "bloom_era")
+    _interrupted(spark, crawl_inputs, state)
+
+    cat = RoundCatalog(spark, state)
+    geo = Bloom(_RESUME_BASE["bloom_capacity"],
+                n_segments=_RESUME_BASE["bloom_segments"])
+    zero = bytes(geo.seg_bytes)
+    cat.write(
+        spark.createDataFrame(
+            [(seg, zero, 1) for seg in range(geo.s)],
+            "seg int, bitmap binary, n_rows long",
+        ),
+        "bloom_segments", 0,
+    )
+    man_path = os.path.join(state, "manifest.json")
+    with open(man_path) as f:
+        man = json.load(f)
+    man["bloom"] = {"mode": "partitioned", "m_seg": int(geo.m_seg),
+                    "k": int(geo.k), "s": int(geo.s)}
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+
+    reads = []
+    for method in ("read", "read_all"):
+        orig = getattr(RoundCatalog, method)
+
+        def logged(self, kind, *a, _orig=orig, **kw):
+            reads.append(kind)
+            return _orig(self, kind, *a, **kw)
+
+        monkeypatch.setattr(RoundCatalog, method, logged)
+
+    pages, _ = crawl_inputs
+    resumed = CrawlEngine(spark, pages, CrawlConfig(**_RESUME_BASE), state)
+    resumed.run(resume=True)
+    assert "bloom_segments" not in reads
+    assert _visited_key(resumed) == _visited_key(uninterrupted)
+    assert _crawl_order_key(resumed) == _crawl_order_key(uninterrupted)

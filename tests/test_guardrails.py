@@ -51,36 +51,6 @@ def test_column_min_fails_closed(spark, tmp_path):
     assert cat.column_min("frontier", 0, "depth") is None
 
 
-def test_bloom_gate_fails_closed_when_stats_absent(spark, tiny_web, tmp_path):
-    """A frontier written without parquet stats must still build the bloom:
-    bloom_needed falls back to True, so the crawl's visited set is unchanged
-    (nothing is ever re-enqueued)."""
-    from pyspark.sql import functions as F
-
-    _, d = tiny_web
-    pages = spark.read.parquet(f"{d}/pages.parquet")
-    seeds = pages.limit(3).select(
-        F.col("image_id").alias("url"), F.lit(0).cast("int").alias("priority")
-    )
-    cfg = CrawlConfig(max_depth=3, budget_per_host=2)
-    eng = CrawlEngine(spark, pages, cfg, str(tmp_path / "gate_state"))
-    eng.init_frontier(seeds)
-    # strip the stats from the round-0 frontier files in place (and drop the
-    # hadoop .crc sidecars the rewrite invalidates)
-    p = eng.cat.path("frontier", 0)
-    for f in os.listdir(p):
-        fp = os.path.join(p, f)
-        if f.endswith(".crc"):
-            os.remove(fp)
-        elif f.endswith(".parquet"):
-            t = pq.read_table(fp)
-            pq.write_table(t, fp, write_statistics=False)
-    hist = eng.run()
-    assert sum(h.get("fetched_ok", 0) for h in hist) > 0
-    # the bloom must have been built for round 0 despite absent stats
-    assert eng.bloom.n_added > 0
-
-
 def test_finalize_clears_stale_parts(spark, tmp_path):
     state = str(tmp_path / "state")
     eng = CrawlEngine(spark, None, CrawlConfig(), state)

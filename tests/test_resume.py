@@ -37,7 +37,7 @@ def test_kill_and_resume_identical(spark, tiny_web, tmp_path):
     want_visited, want_order = _state_fingerprint(full)
 
     # interrupted run: stop after 2 rounds ("kill"), then resume in a FRESH
-    # engine object (bloom + state rebuilt from disk only)
+    # engine object (state read from disk only)
     part = CrawlEngine(spark, pages, cfg, str(tmp_path / "part"))
     part.init_frontier(seeds)
     import cs3103_gocrawler_spark.streaming.rounds as rounds_mod
