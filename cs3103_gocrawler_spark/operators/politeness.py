@@ -14,7 +14,11 @@ one window partition. Two-phase exact top-k instead:
 Selection is therefore EXACTLY the per-host top-B by (priority, depth, url) —
 identical at any parallelism level and identical to the sequential oracle,
 which is what the two-cluster-size determinism check stresses (§4.2.4).
-Rows not selected are deferred to the next round's frontier.
+Rows not selected are deferred to the next round's frontier. The engine
+derives them there with the frontier's seen anti-join (every dequeued row is
+fetched, so pending minus seen is the deferred side) and never reads the
+second output of ``dequeue``; it is kept for the benchmark's dequeue replay
+and the tests.
 """
 
 from __future__ import annotations

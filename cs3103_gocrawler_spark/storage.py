@@ -5,11 +5,14 @@ the sandbox has no Iceberg runtime jar, so each logical table is a directory
 of per-round parquet subdirs plus an atomically-renamed JSON manifest:
 
     state_dir/
-      manifest.json              <- {"last_round": N, ...}; atomic rename
-      frontier/r00000/*.parquet  <- full snapshot per round (small: pending only)
-      seen/r00000/*.parquet      <- append-only per-round delta
-      visited/r00000/*.parquet   <- append-only per-round delta
-      rejected/..., metrics/..., validation/...
+      manifest.json                <- {"last_round": N, "metrics": [...]};
+                                      atomic rename
+      frontier/r00000/*.parquet    <- full snapshot per round (small: pending only)
+      fetched/r00000/*.parquet     <- append-only per-round delta; visited,
+                                      rejected, seen and validation are views
+      host_state/r00001/*.parquet  <- per-host token balances (carryover only)
+      robots/r00000/*.parquet      <- live-fetched robots rules (live robots only)
+      metrics_table/*.parquet      <- per-round metrics, written once at the end
 
 Swap-to-Iceberg notes: ``append`` ≙ ``df.writeTo(tbl).append()`` with the
 manifest replaced by Iceberg snapshot ids; ``read_all`` ≙ a plain table scan;

@@ -4,7 +4,6 @@ One round replaces one wave of the reference's goroutine tree
 (crawler.go:86-109); the dataflow per round (SURVEY.md §3.2):
 
     frontier_r ──dequeue (politeness two-phase top-B, W2)──┐
-        │ deferred (stays pending)                          │
         └──fetch join vs pages (J4, JVM) → outcome (P1-P6) ─┤
             → ONE fused mapInPandas (U2/U3/U4/X5):          │
               retry/backoff enrich + link extraction +      │
@@ -13,27 +12,30 @@ One round replaces one wave of the reference's goroutine tree
             → write fetched_r                               │
                        ↑ the ONE materialization point      │
     children = explode(links) → url columns on the JVM      │
-             → robots gate → exact anti-join vs seen (J1)   │
-    frontier_{r+1} = min-(depth,parent) merge(children ∪ deferred)  (A5)
+             → robots gate                                  │
+    frontier_{r+1} = min-(depth,parent) merge(frontier_r ∪  │  (A5)
+        children) → exact anti-join vs seen(≤ r)            │  (J1)
     manifest commit = checkpoint
 
 Job discipline: the round's per-URL work rides two writes — the fetched
 write (outcome counts and min depth ride it as ``Observation`` metrics) and
 the frontier write, whose plan holds the children pipeline and the seen
-filter: one exact ``left_anti`` join against the fetched table's urls, with
-no bloom build, probe or extra table. Row counts come from parquet footer
-metadata on the driver (Iceberg: snapshot summaries), not count() jobs.
+filter: one exact ``left_anti`` join of pending ∪ children against the
+fetched table's urls, with no bloom build, probe or extra table. That join
+also yields the deferred rows, so the dequeue's rank windows run once,
+inside the fetched write. Row counts come from parquet footer metadata on
+the driver (Iceberg: snapshot summaries), not count() jobs or the observed
+metrics; a next frontier with no candidates is committed driver-side.
 visited/rejected/seen/validation are *views* over the fetched table
 (column-pruned, predicate-filtered parquet reads), not extra
 materializations; payload validation runs inside the fetch pass (the payload
 reaches a Python worker exactly once and never re-joins); per-round metrics
 are buffered into the manifest and written as a table once at the end. Each
-write still runs several Spark jobs (AQE query stages, the dequeue windows,
-the children pipeline): traced crawlbench runs count ~7 jobs per round on
-wide-bfs and ~17 on polite-deep (``rounds.spark_jobs_per_round``, seed 101,
-local[4], 4 vCPUs). Outside live-robots mode, which fetches new hosts'
-robots.txt in its own pass, the fused fetch pass is the round's only
-Python stage.
+write still runs several Spark jobs (AQE query stages, the children
+pipeline): traced crawlbench runs count ~7.3 jobs per round on wide-bfs and
+~13.75 on polite-deep (``rounds.spark_jobs_per_round``, seed 101, local[4],
+4 vCPUs). Outside live-robots mode, which fetches new hosts' robots.txt in
+its own pass, the fused fetch pass is the round's only Python stage.
 
 Determinism: every output table has an order-insensitive definition; the
 recorded crawl ordering (W3) is ``row_number() OVER (PARTITION BY host ORDER
@@ -45,6 +47,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
@@ -442,12 +445,10 @@ class CrawlEngine:
             return {"round_id": r, "pending": 0, "terminated": True}
 
         takes, allowance, budget_arg = self._host_takes(r, pending)
-        dequeued, deferred = dequeue(
+        # the deferred side is never read: the frontier anti-join yields it
+        dequeued, _ = dequeue(
             pending, budget_arg, cfg.salt_buckets, host_takes=takes
         )
-        # with no budget, no carryover and no delay caps, dequeue takes
-        # everything — the deferred side is pending.limit(0) by construction
-        deferred_static_empty = takes is None and budget_arg is None
 
         # fused fetch+enrich+extract(+validate): body/payload cross the
         # JVM↔Python pipe exactly once and are dropped inside the worker
@@ -472,9 +473,8 @@ class CrawlEngine:
             )
         )
         # outcome counts + min depth ride the write job as observed metrics
-        # (accumulators) — zero extra Spark job; before this the round paid a
-        # dedicated stats job, a fixed serial tax that flattened the scaling
-        # curve at high core counts where the real work is short
+        # (accumulators, no extra job). A re-run stage may count them twice,
+        # so the frontier takes the dequeued count from the fetched footer
         obs = Observation(f"round_{r}")
         processed = processed.observe(
             obs,
@@ -492,7 +492,8 @@ class CrawlEngine:
             o: int(stats[o] or 0) for o in _OUTCOMES if stats[o]
         }
         min_depth = None if stats["min_depth"] is None else int(stats["min_depth"])
-        dequeued_n = sum(outcome_counts.values())
+        dequeued_n = self.cat.count("fetched", r)
+        deferred_n = pending_n - dequeued_n
         processed = self.cat.read("fetched", r)
 
         if allowance is not None:
@@ -518,6 +519,13 @@ class CrawlEngine:
         can_spawn = (
             dequeued_n > 0 and min_depth is not None and min_depth + 1 <= depth_cap
         )
+        # frontier r+1 = (pending ∪ children) minus seen(≤ r). No pending row
+        # was fetched before round r, and every row dequeued in round r has
+        # one fetched_r row, so the pending rows the anti-join keeps are
+        # exactly the deferred ones
+        candidates = []
+        if deferred_n > 0:
+            candidates.append(pending.select(*frontier_cols))
         if can_spawn:
             # children: J5 edge construction — parent rides the row, no join needed
             visited_r = processed.filter(F.col("outcome") == "ok")
@@ -535,28 +543,27 @@ class CrawlEngine:
                 # fetch rules for hosts first seen among this round's
                 # children BEFORE they are gated / enter frontier r+1
                 self._refresh_live_robots(children, r + 1)
-            children = self._robots_gate(children)
             # no persist: the frontier write below is the children's only
             # reader (live robots reads the ungated children in its own job)
+            candidates.append(self._robots_gate(children).select(*frontier_cols))
+        if candidates:
+            # merge first: below the merge, Catalyst pushes the anti-join
+            # into each union branch and joins the seen side twice
+            merged = self._min_merge(reduce(DataFrame.unionByName, candidates))
             unseen, _ = filter_unseen(
-                self.spark, children, self.seen_urls(up_to_round=r), None
+                self.spark, merged, self.seen_urls(up_to_round=r), None
             )
-            merged = unseen.select(*frontier_cols).unionByName(deferred.select(*frontier_cols))
+            self.cat.write(unseen, "frontier", r + 1)
         else:
-            merged = None if deferred_static_empty else deferred.select(*frontier_cols)
-        if merged is None:
-            # nothing can reach frontier r+1 (no spawns, deferred provably
-            # empty): commit the empty table driver-side — a Spark write of
-            # an empty DF still costs a full job of scheduler overhead, which
+            # nothing can reach frontier r+1 (no spawns, nothing deferred):
+            # commit the empty table driver-side — a Spark write of an empty
+            # DF still costs a full job of scheduler overhead, which
             # dominates the depth-capped final round of a saturated crawl
             self.cat.write_empty("frontier", r + 1, _frontier_arrow_schema(pending))
-        else:
-            self.cat.write(self._min_merge(merged), "frontier", r + 1)
         _mark("frontier_write")
         next_n = self.cat.count("frontier", r + 1)
         _mark("frontier_count")
 
-        deferred_n = pending_n - dequeued_n
         m = {
             "round_id": r,
             "pending": int(pending_n),
