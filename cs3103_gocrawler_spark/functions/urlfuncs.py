@@ -88,7 +88,8 @@ def split_canonical(cu: str) -> tuple[str, str]:
 
 
 def sha1_64(s: str) -> int:
-    """First 8 bytes of SHA1(s) as signed int64 — the url_sha1 key used for
-    dequeue salting (SURVEY.md F11)."""
+    """First 8 bytes of SHA1(s) as signed int64 — the url_sha1 column every
+    frontier and fetched row carries (SURVEY.md F11); the bloom library
+    routes and hashes on it."""
     d = hashlib.sha1(s.encode("utf-8")).digest()
     return int.from_bytes(d[:8], "big", signed=True)

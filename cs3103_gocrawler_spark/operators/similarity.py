@@ -62,22 +62,18 @@ def _score_hoisted(pairs: DataFrame) -> DataFrame:
 
 
 def _exact_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Exact per-query top-k, skew-proof: phase 1 ranks within
-    (query_id, physical partition) — any global top-k row is necessarily in
-    its partition's top-k, so this prunes to ≤ k·P rows per query before the
-    per-query window. A single window over query_id alone puts every scored
-    neighbor of one query in one window partition (10⁹ rows at scale)."""
-    p1 = scored.withColumn("_pid", F.spark_partition_id())
-    order = [F.col("cosine").desc(), F.col("neighbor_id").asc()]
-    w1 = Window.partitionBy("query_id", "_pid").orderBy(*order)
-    pruned = (
-        p1.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_r1", "_pid")
+    """Exact per-query top-k: one ``row_number`` window over query_id with a
+    literal ``rank <= k`` filter. For that filter Catalyst plans a Partial
+    ``WindowGroupLimit`` that keeps each query's top-k inside every input
+    partition before the query_id exchange, and a Final one after it, so a
+    query's scored neighbors (10⁹ rows at scale) never reach one window
+    partition whole. A k above ``spark.sql.optimizer.windowGroupLimitThreshold``
+    (1000) gets no limit and stays exact."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
-    w2 = Window.partitionBy("query_id").orderBy(*order)
     return (
-        pruned.withColumn("rank", F.row_number().over(w2))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
@@ -91,7 +87,8 @@ def cosine_topk(emb: DataFrame, k: int = 5, query_mod: int = 50,
     Scale shape: the QUERY side (1/query_mod of the data by construction) is
     the broadcast side; the full vector set streams and is never broadcast —
     broadcasting the neighbor side OOMs the moment the corpus outgrows one
-    executor. Top-k selection is the two-phase skew-proof rank."""
+    executor. Top-k selection is one rank window that Catalyst prunes per
+    input partition before the shuffle (``_exact_topk``)."""
     # norms are per-ROW quantities: materialize them on each side before the
     # join so the per-pair projection evaluates one O(dim) fold (the dot)
     # instead of three — bit-identical result (the norm's float chain is

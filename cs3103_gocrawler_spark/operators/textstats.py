@@ -301,33 +301,26 @@ def stratified_sample(
     group_col: str = "source",
     id_col: str = "doc_id",
     n_per_group: int = 50,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Deterministic per-group corpus sampling: the n_per_group documents
     with the smallest (hash64(id), id) key in each group — a seedless,
     rerun-stable stratified sample for training-data mixing.
 
-    Scale shape: the naive single window per group funnels each group (a
-    handful of sources over billions of docs) through ONE reducer; this is
-    the same salted two-phase rank as the politeness dequeue — phase 1 ranks
-    within (group, hash-salt bucket) across salt_buckets× more partitions and
-    keeps n per bucket, phase 2 ranks the surviving n×salt_buckets rows per
-    group. Result is exactly the global per-group top-n.
+    Scale shape: one ``row_number`` window per group with a literal
+    ``sample_rank <= n_per_group`` filter. Catalyst plans a Partial
+    ``WindowGroupLimit`` that keeps n per group inside every input partition
+    before the group exchange, and a Final one after it, so a group (a
+    handful of sources over billions of docs) reaches its reducer as at most
+    n rows per input partition. Result is exactly the global per-group
+    top-n; an n above ``spark.sql.optimizer.windowGroupLimitThreshold``
+    (1000) gets no limit and stays exact.
     """
     from pyspark.sql import Window
 
-    keyed = docs.withColumn("_h", hash64(F.col(id_col).cast("string"))).withColumn(
-        "_salt", F.pmod(F.col("_h"), F.lit(salt_buckets))
-    )
-    w1 = Window.partitionBy(group_col, "_salt").orderBy("_h", id_col)
-    phase1 = (
-        keyed.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= n_per_group)
-        .drop("_r1", "_salt")
-    )
-    w2 = Window.partitionBy(group_col).orderBy("_h", id_col)
+    keyed = docs.withColumn("_h", hash64(F.col(id_col).cast("string")))
+    w = Window.partitionBy(group_col).orderBy("_h", id_col)
     return (
-        phase1.withColumn("sample_rank", F.row_number().over(w2))
+        keyed.withColumn("sample_rank", F.row_number().over(w))
         .filter(F.col("sample_rank") <= n_per_group)
         .drop("_h")
     )

@@ -405,11 +405,11 @@ WHERE rank <= CASE WHEN l_suppkey % 3 = 0
 
 
 def q_host_skew_stats(spark, sf_dir):
-    """T32 — key-skew diagnostics, the pre-pass behind the engine's salting
-    decision (north_rule: per-host salted-hash partitioning to kill skew):
-    per-key row counts → exact max / mean / p50 / p90 / p99 and the
-    max-over-mean skew ratio. events.user_id stands in for the per-host
-    frontier queue depth.
+    """T32 — key-skew diagnostics (north_rule: know the per-host skew before
+    it reaches one reducer; the engine's dequeue leaves it to Catalyst's
+    per-partition ``WindowGroupLimit``): per-key row counts → exact max /
+    mean / p50 / p90 / p99 and the max-over-mean skew ratio. events.user_id
+    stands in for the per-host frontier queue depth.
 
     Scale shape: the per-key count is one map-side-partial aggregate over the
     full table; everything after runs on the KEY-count relation (|keys| ≪
@@ -1190,7 +1190,8 @@ FROM t2
 
 
 def q_stratified_sample(spark, sf_dir):
-    """T24 — deterministic per-source top-n sample (salted two-phase rank)."""
+    """T24 — deterministic per-source top-n sample (one rank window; Catalyst
+    adds the Partial/Final ``WindowGroupLimit``)."""
     df = textstats.stratified_sample(
         _t(spark, sf_dir, "documents"), group_col="source", n_per_group=50
     )

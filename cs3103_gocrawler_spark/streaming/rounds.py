@@ -3,7 +3,7 @@
 One round replaces one wave of the reference's goroutine tree
 (crawler.go:86-109); the dataflow per round (SURVEY.md §3.2):
 
-    frontier_r ──dequeue (politeness two-phase top-B, W2)──┐
+    frontier_r ──dequeue (one host window, top-B, W2)──────┐
         └──fetch join vs pages (J4, JVM) → outcome (P1-P6) ─┤
             → ONE fused mapInPandas (U2/U3/U4/X5):          │
               retry/backoff enrich + link extraction +      │
@@ -22,7 +22,7 @@ write (outcome counts and min depth ride it as ``Observation`` metrics) and
 the frontier write, whose plan holds the children pipeline and the seen
 filter: one exact ``left_anti`` join of pending ∪ children against the
 fetched table's urls, with no bloom build, probe or extra table. That join
-also yields the deferred rows, so the dequeue's rank windows run once,
+also yields the deferred rows, so the dequeue's one rank window runs once,
 inside the fetched write. Row counts come from parquet footer metadata on
 the driver (Iceberg: snapshot summaries), not count() jobs or the observed
 metrics; a next frontier with no candidates is committed driver-side.
@@ -33,7 +33,7 @@ reaches a Python worker exactly once and never re-joins); per-round metrics
 are buffered into the manifest and written as a table once at the end. Each
 write still runs several Spark jobs (AQE query stages, the children
 pipeline): traced crawlbench runs count ~7.3 jobs per round on wide-bfs and
-~13.75 on polite-deep (``rounds.spark_jobs_per_round``, seed 101, local[4],
+12.75 on polite-deep (``rounds.spark_jobs_per_round``, seed 101, local[4],
 4 vCPUs). Outside live-robots mode, which fetches new hosts' robots.txt in
 its own pass, the fused fetch pass is the round's only Python stage.
 
@@ -141,6 +141,9 @@ class CrawlConfig:
     # mapInPandas delta and the dim persists as a catalog table (resume
     # re-reads, never re-fetches)
     live_robots: bool = False
+    # the engine does not read this (the dequeue is one rank window);
+    # kept for crawlbench until ROADMAP item 2: its workloads set it and its
+    # dequeue replay passes it on
     salt_buckets: int = 16
     # kept for crawlbench until ROADMAP item 2: its workloads set these and
     # its filter_unseen replay reads them; the engine reads none of them
@@ -182,6 +185,13 @@ class CrawlConfig:
                 f"fractional budget_per_host ({b}) requires "
                 "politeness_carryover=True (without carryover the reference "
                 "semantics are an integer per-round take)"
+            )
+        elif b < 1:
+            # a take of 0 dequeues nothing, so every round defers all of
+            # pending and the engine runs max_rounds empty rounds
+            raise ValueError(
+                f"budget_per_host must be >= 1 (got {b}): a per-round take "
+                "of 0 dequeues nothing — zero-dequeue livelock"
             )
 
 
@@ -364,8 +374,8 @@ class CrawlEngine:
         sets each host's take; the robots crawl_delay cap then BOUNDS it —
         unspent allowance stays in the balance via the host_state update.
         Without carryover, delayed hosts take min(budget, cap) and hosts
-        without a delay fall back to the flat budget (dequeue's coalesce
-        default; unbounded when budget is None). New politeness knobs compose
+        without a delay fall back to the flat budget (the dequeue's literal
+        bound; unbounded when budget is None). New politeness knobs compose
         here once instead of forking the round loop."""
         cfg = self.cfg
         takes = allowance = None
@@ -373,13 +383,15 @@ class CrawlEngine:
         if cfg.politeness_carryover and cfg.budget_per_host is not None:
             # token carryover (ST5): per-host allowance = balance + budget;
             # floor dequeues now, the fraction persists in host_state.
-            # allowance covers every pending host (full join), so the
-            # absent-host default budget of 0 never actually fires
+            # The balance is capped at one budget, so no take exceeds
+            # floor(2b): that is the dequeue's literal bound. allowance
+            # covers every pending host (full join), so as an absent-host
+            # default it never fires
             allowance = self._host_allowance(r, pending)
             takes = allowance.select(
                 "host", F.floor("allowance").cast("int").alias("take")
             )
-            budget_arg = 0
+            budget_arg = int(2 * cfg.budget_per_host)
         if self._delay_caps is not None:
             if takes is not None:
                 takes = takes.join(self._delay_caps, "host", "left").select(
@@ -446,9 +458,7 @@ class CrawlEngine:
 
         takes, allowance, budget_arg = self._host_takes(r, pending)
         # the deferred side is never read: the frontier anti-join yields it
-        dequeued, _ = dequeue(
-            pending, budget_arg, cfg.salt_buckets, host_takes=takes
-        )
+        dequeued, _ = dequeue(pending, budget_arg, host_takes=takes)
 
         # fused fetch+enrich+extract(+validate): body/payload cross the
         # JVM↔Python pipe exactly once and are dropped inside the worker

@@ -19,8 +19,8 @@ frontier): ``generate_spark`` runs the identical row function inside
 ``mapInPandas`` over ``spark.range(n_pages)``, so generation itself is an
 embarrassingly-parallel Spark job with no shuffle.
 
-Host sizes follow a power law (rank^-alpha) to exercise the skew/salting
-path (SURVEY.md §4.2.1); link targets mix same-host / cross-host /
+Host sizes follow a power law (rank^-alpha) to exercise per-host skew in
+the dequeue's host window (SURVEY.md §4.2.1); link targets mix same-host / cross-host /
 dangling-404 / blacklisted-host per FIXTURES.md §2.
 """
 

@@ -61,6 +61,29 @@ def main() -> None:
     ap.add_argument("--report", default=None, help="write the JSON crawl report here (S7)")
     args = ap.parse_args()
 
+    from cs3103_gocrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine
+
+    # validate the config before a JVM starts: a bad budget is a usage error
+    budget = args.budget_per_host
+    if budget is not None and budget.is_integer():
+        budget = int(budget)
+    try:
+        cfg = CrawlConfig(
+            max_depth=args.max_depth,
+            budget_per_host=budget,
+            politeness_carryover=args.carryover,
+            blacklist_hosts=tuple(h for h in args.blacklist.split(",") if h),
+            blacklist_www_variants=args.blacklist_www_variants,
+            blacklist_substrings=tuple(s for s in args.blacklist_substrings.split(",") if s),
+            scope_same_host=args.same_host,
+            scope_path_includes=tuple(p for p in args.path_includes.split(",") if p),
+            validate=args.validate,
+            gen_seed=args.seed,
+            round_target_ms=args.round_target_ms,
+        )
+    except (TypeError, ValueError) as e:
+        ap.error(str(e))
+
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F  # noqa: N812
 
@@ -72,7 +95,6 @@ def main() -> None:
         .getOrCreate()
     )
 
-    from cs3103_gocrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine
     from cs3103_gocrawler_spark.synthetic.webgen import WebConfig, generate_spark
 
     if args.gen_pages and not os.path.exists(
@@ -87,22 +109,6 @@ def main() -> None:
     pages = spark.read.parquet(f"{args.web_dir}/pages.parquet")
     seeds = spark.read.parquet(f"{args.web_dir}/seeds.parquet").select(
         "url", F.col("priority").cast("int").alias("priority")
-    )
-    budget = args.budget_per_host
-    if budget is not None and not args.carryover:
-        budget = int(budget)
-    cfg = CrawlConfig(
-        max_depth=args.max_depth,
-        budget_per_host=budget,
-        politeness_carryover=args.carryover,
-        blacklist_hosts=tuple(h for h in args.blacklist.split(",") if h),
-        blacklist_www_variants=args.blacklist_www_variants,
-        blacklist_substrings=tuple(s for s in args.blacklist_substrings.split(",") if s),
-        scope_same_host=args.same_host,
-        scope_path_includes=tuple(p for p in args.path_includes.split(",") if p),
-        validate=args.validate,
-        gen_seed=args.seed,
-        round_target_ms=args.round_target_ms,
     )
     robots_df = (
         spark.read.parquet(f"{args.web_dir}/robots.parquet") if args.robots else None

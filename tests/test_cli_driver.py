@@ -100,3 +100,18 @@ def test_cli_report_matches_engine(spark, tiny_web, tmp_path, name, cli, cfg_kw)
     assert cli_report["network_info"] == eng_report["network_info"]
     assert cli_report["page_info"] == eng_report["page_info"]
     assert len(cli_report["page_info"]) == summary["urls_fetched_ok"]
+
+
+@pytest.mark.parametrize("budget", ["2.5", "0"])
+def test_cli_bad_budget_is_usage_error(tmp_path, budget):
+    """A budget CrawlConfig refuses (fractional without --carryover, or
+    below 1) exits 2 with usage before a JVM starts. JAVA_HOME points
+    nowhere, so a driver that started one would fail another way."""
+    p = subprocess.run(
+        [sys.executable, DRIVER, "--web-dir", str(tmp_path / "missing"),
+         "--state-dir", str(tmp_path / "state"), "--budget-per-host", budget],
+        capture_output=True, text=True, timeout=120,
+        env={**os.environ, "JAVA_HOME": str(tmp_path / "no-java")},
+    )
+    assert p.returncode == 2, p.stderr[-2000:]
+    assert "usage:" in p.stderr and "budget_per_host" in p.stderr, p.stderr

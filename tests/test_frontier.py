@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import Observation
 from test_crawl_delay import _robots_pdf
 from test_oracle_conformance import compare, oracle_run, run_engine
+from test_plans import _plan, assert_topk_once
 from test_resume import _state_fingerprint
 
 from cs3103_gocrawler_spark.storage import RoundCatalog
@@ -23,10 +24,10 @@ from cs3103_gocrawler_spark.streaming.rounds import METRIC_KEYS, CrawlConfig, Cr
 POLITE = CrawlConfig(max_depth=5, budget_per_host=2.5, politeness_carryover=True)
 
 
-def _polite_engine(spark, tiny_web, state_dir):
+def _polite_engine(spark, tiny_web, state_dir, cfg=POLITE):
     cfg_web, web_dir = tiny_web
     return CrawlEngine(
-        spark, spark.read.parquet(f"{web_dir}/pages.parquet"), POLITE, state_dir,
+        spark, spark.read.parquet(f"{web_dir}/pages.parquet"), cfg, state_dir,
         robots=spark.createDataFrame(_robots_pdf(cfg_web)),
     )
 
@@ -53,31 +54,41 @@ def _metrics(eng):
     ]
 
 
-@pytest.fixture(scope="module")
-def polite_crawl(spark, tiny_web, tmp_path_factory):
-    """One uninterrupted POLITE crawl, with the optimized plan of every
-    frontier r+1 it writes through Spark."""
-    plans = {}
+def _recorded_crawl(spark, tiny_web, state_dir, cfg):
+    """Run a crawl with tiny_web's robots delay cap, recording the optimized
+    plan of every frontier r+1 written through Spark and the executed plan
+    of every fetched write."""
+    frontier_plans, fetched_plans = {}, {}
     write = RoundCatalog.write
 
     def recording_write(self, df, kind, round_id):
         if kind == "frontier" and round_id > 0:
-            plans[round_id] = _plan_nodes(df)
+            frontier_plans[round_id] = _plan_nodes(df)
+        if kind == "fetched":
+            fetched_plans[round_id] = _plan(df)
         return write(self, df, kind, round_id)
 
     mp = pytest.MonkeyPatch()
     mp.setattr(RoundCatalog, "write", recording_write)
     try:
-        eng = _polite_engine(spark, tiny_web, str(tmp_path_factory.mktemp("polite")))
+        eng = _polite_engine(spark, tiny_web, state_dir, cfg)
         eng.init_frontier(_seeds(spark, tiny_web))
         history = eng.run()
     finally:
         mp.undo()
-    return eng, history, plans
+    return eng, history, frontier_plans, fetched_plans
+
+
+@pytest.fixture(scope="module")
+def polite_crawl(spark, tiny_web, tmp_path_factory):
+    """One uninterrupted POLITE crawl, with its recorded plans."""
+    return _recorded_crawl(
+        spark, tiny_web, str(tmp_path_factory.mktemp("polite")), POLITE
+    )
 
 
 def test_frontier_never_reranks(polite_crawl):
-    _, history, plans = polite_crawl
+    _, history, plans, _ = polite_crawl
     assert sum(h.get("deferred", 0) for h in history) > 0, "nothing was deferred"
     assert len(plans) >= 3
     for r, nodes in plans.items():
@@ -85,6 +96,23 @@ def test_frontier_never_reranks(polite_crawl):
         assert not [n for n in names if n.startswith("Window")], (r, names)
         anti = [rest for n, rest in nodes if n == "Join" and rest.startswith("LeftAnti")]
         assert len(anti) == 1, (r, names)
+
+
+@pytest.mark.parametrize("carryover", [False, True], ids=["budget_caps", "carryover_caps"])
+def test_fetched_write_ranks_once(spark, tiny_web, tmp_path, polite_crawl, carryover):
+    """Every round's dequeue inside the fetched write is one host window
+    whose pending side is pruned by a Partial WindowGroupLimit before its
+    only host exchange, with a flat budget or carryover takes, both bounded
+    by a robots delay cap."""
+    if carryover:
+        _, history, _, fetched = polite_crawl
+    else:
+        cfg = CrawlConfig(max_depth=5, budget_per_host=2)
+        _, history, _, fetched = _recorded_crawl(spark, tiny_web, str(tmp_path / "s"), cfg)
+    assert sum(h.get("deferred", 0) for h in history) > 0, "nothing was deferred"
+    assert len(fetched) >= 3
+    for plan in fetched.values():
+        assert_topk_once(plan, "host")
 
 
 def test_empty_frontier_commit_follows_counts(spark, tiny_web, tmp_path, monkeypatch):
@@ -142,7 +170,7 @@ def test_frontier_does_not_trust_observed_counts(spark, tiny_web, tmp_path, monk
 def test_crash_at_frontier_write_resumes(spark, tiny_web, tmp_path, monkeypatch, polite_crawl):
     """A crash at the frontier write of round 2, after fetched_2 and
     host_state_3 exist, resumes to the uninterrupted crawl."""
-    full, _, _ = polite_crawl
+    full, _, _, _ = polite_crawl
     write = RoundCatalog.write
 
     def crashing_write(self, df, kind, round_id):

@@ -19,6 +19,15 @@ def test_carryover_budget_below_half_rejected():
     CrawlConfig(budget_per_host=0.5, politeness_carryover=True)
 
 
+def test_budget_below_one_rejected():
+    """Without carryover a take below 1 dequeues nothing, so every round
+    would defer all of pending until max_rounds."""
+    for b in (0, 0.0, -2):
+        with pytest.raises(ValueError, match="livelock"):
+            CrawlConfig(budget_per_host=b)
+    CrawlConfig(budget_per_host=1)
+
+
 def test_fractional_budget_without_carryover_rejected():
     with pytest.raises(TypeError, match="carryover"):
         CrawlConfig(budget_per_host=2.5)

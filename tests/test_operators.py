@@ -32,11 +32,13 @@ def _pending_df(spark, n_hosts=5, per_host=40):
 
 
 def test_two_phase_dequeue_is_exact_per_host_topk(spark):
-    """The salted two-phase rank must select EXACTLY the per-host top-B by
-    (priority, depth, url) — same as a single global window."""
+    """The one rank window, pruned per input partition by Catalyst's
+    WindowGroupLimit, must select EXACTLY the per-host top-B by
+    (priority, depth, url) — the same rows as a pandas sort over all of
+    pending — and the deferred side must hold every other row."""
     pending = _pending_df(spark)
     B = 7
-    dq, df_deferred = dequeue(pending, B, salt_buckets=4)
+    dq, df_deferred = dequeue(pending, B)
     got = dq.toPandas()
     want = (
         pending.toPandas()
@@ -550,7 +552,7 @@ def test_contamination_check_semantics(spark):
 
 
 def test_stratified_sample_exact_per_group_topn(spark):
-    """Salted two-phase sample == naive single-window per-group top-n."""
+    """One-window sample == the per-group top-n of a pandas sort."""
     from cs3103_gocrawler_spark.operators.dedup import hash64
     from cs3103_gocrawler_spark.operators.textstats import stratified_sample
 

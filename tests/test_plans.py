@@ -25,6 +25,33 @@ def _formatted(df) -> str:
     )
 
 
+def assert_topk_once(plan: str, key: str) -> None:
+    """The plan ranks with exactly one Window, and on the path from it down
+    to its input (each node's first child) the rows cross one Exchange,
+    hash-partitioned by ``key``, with a Partial WindowGroupLimit below it:
+    the top-k is pruned per input partition before the shuffle."""
+    nodes = []
+    for line in plan.splitlines():
+        m = _NODE_RE.match(line)
+        if m:
+            nodes.append((m.start(1), line[m.start(1):]))
+    windows = [i for i, (_, text) in enumerate(nodes) if text.startswith("Window ")]
+    assert len(windows) == 1, plan
+    i = windows[0]
+    path = [nodes[i][1]]
+    while i + 1 < len(nodes) and nodes[i + 1][0] > nodes[i][0]:
+        i += 1
+        path.append(nodes[i][1])
+    exchanges = [k for k, text in enumerate(path) if text.startswith("Exchange")]
+    assert len(exchanges) == 1, plan
+    assert path[exchanges[0]].startswith(f"Exchange hashpartitioning({key}#"), plan
+    partial = [
+        k for k, text in enumerate(path)
+        if text.startswith("WindowGroupLimit") and text.endswith("Partial")
+    ]
+    assert partial and partial[0] > exchanges[0], plan
+
+
 def test_filter_pushdown_reaches_parquet(spark):
     df = (
         spark.read.parquet(f"{SF_DIR}/orders.parquet")
@@ -91,14 +118,14 @@ def test_bucketed_fetch_join_no_big_side_shuffle(spark, tiny_web):
 
 
 def test_politeness_dequeue_partial_windows(spark):
-    """Two-phase top-B: both window ranks present, partitioned so no single
-    host's rows all land in one partition pre-prune (skew guard)."""
+    """One rank window per host: Catalyst plans a Partial WindowGroupLimit
+    below the key exchange, so no key's rows all reach one partition before
+    the prune (skew guard), and a Final one above it."""
     from cs3103_gocrawler_spark.plans.generic_queries import (
         q_politeness_rank_dequeue,
     )
 
-    plan = _plan(q_politeness_rank_dequeue(spark, SF_DIR))
-    assert plan.count("RunningWindowFunction") >= 1 or plan.count("Window") >= 1
+    assert_topk_once(_plan(q_politeness_rank_dequeue(spark, SF_DIR)), "l_suppkey")
 
 
 def test_fused_fetch_single_python_stage(spark, tiny_web):
@@ -208,8 +235,10 @@ _FP_KEYS = (
 # Python-eval nodes is exactly what this gate exists to catch)
 PLAN_FINGERPRINTS = {
     "broadcast_dim_join": {"BroadcastHashJoin": 1, "Exchange": 1, "HashAggregate": 2},
-    "cosine_topk": {"BroadcastNestedLoopJoin": 1, "Exchange": 2, "Sort": 4,
-                    "Window": 2, "WindowGroupLimit": 4},
+    # one rank window: Catalyst's Partial/Final WindowGroupLimit pair is the
+    # skew guard
+    "cosine_topk": {"BroadcastNestedLoopJoin": 1, "Exchange": 1, "Sort": 2,
+                    "Window": 1, "WindowGroupLimit": 2},
     "dedup_minhash_lsh": {"BroadcastHashJoin": 1, "Exchange": 2, "Generate": 4,
                           "HashAggregate": 6},
     "edge_explode_tokens": {"Exchange": 1, "Generate": 1, "HashAggregate": 2},

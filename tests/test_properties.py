@@ -105,8 +105,9 @@ def test_sha1_64_signed_int64_and_deterministic(s):
 
 def test_dequeue_is_input_order_and_salt_invariant(spark):
     """WHAT gets dequeued is a pure function of (pending set, budget) — not
-    of row order, partitioning, or the salt-bucket count. This is the
-    determinism the N-vs-4N identical-output gate rests on."""
+    of row order, partitioning, or the salt-bucket count (which the one-window
+    dequeue ignores). This is the determinism the N-vs-4N identical-output
+    gate rests on."""
     from cs3103_gocrawler_spark.operators.politeness import dequeue
 
     rnd = random.Random(1729)
