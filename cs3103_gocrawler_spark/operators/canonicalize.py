@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql import types as T  # noqa: N812
 
+from ..functions.pyworker import forget_zip_finders
 from ..functions.urlfuncs import canonicalize_url
 
 # split_canonical on a canonical URL (scheme://host[:port]/path[?query]):
@@ -38,6 +39,7 @@ def with_url_columns(df: DataFrame, url_col: str = "url") -> DataFrame:
 # Python name, so the name stays ``canon_struct``.
 @F.pandas_udf(T.StringType())
 def canon_struct(urls: pd.Series) -> pd.Series:
+    forget_zip_finders()
     return pd.Series(
         [canonicalize_url(u) if u is not None else None for u in urls],
         dtype=object,

@@ -6,14 +6,23 @@ one connection pool per executor slot, retry+backoff per element
 "network" is the generator's pages table, so the fetch becomes a *join*:
 
     dequeued(url, ...) LEFT JOIN pages(image_id → url, status, content_type,
-    body_html [, payload cols]) — a repartition join; on Iceberg both sides
-    are bucketed by the same key so it is a storage-partitioned join with no
-    full shuffle (SURVEY.md §4.2.5). The join output's big columns go
-    straight into ONE fused ``mapInPandas`` pass (``fetch_process``) that
-    runs everything Python-side — retry/backoff enrich, canonical href
-    extraction, payload validation — and drops them inside the worker, so
-    they never enter a shuffle NOR a second JVM↔Python pipe crossing (§4.2
-    spill discipline; profiling numbers in the ``fetch_process`` docstring).
+    body_html [, payload cols]). crawlbench registers the pages table
+    bucketed by ``image_id``, yet AQE's final plan broadcasts the whole
+    pruned pages side every round (wide-bfs: ``BroadcastQueryStage
+    sizeInBytes=32.5 MiB``, ``Bucketed: false (disabled by query
+    planner)``), so neither a repartition nor a storage-partitioned join
+    runs. The join output's big columns go straight into ONE fused
+    ``mapInPandas`` pass (``fetch_process``) that runs everything
+    Python-side — retry/backoff enrich, canonical href extraction, payload
+    validation — and drops them inside the worker, so they never enter a
+    shuffle NOR a second JVM↔Python pipe crossing (§4.2 spill discipline;
+    profiling numbers in the ``fetch_process`` docstring).
+
+Negative result, so nobody retries it blind: a ``shuffle_merge`` hint on
+the join does spread the fused pass over n tasks, but the fetched table is
+then written as n files per round; ``state_mb`` went 0.134 → 0.226 on
+polite-deep and 0.488 → 0.624 on wide-bfs (2 runs each, ``local[4]``),
+both past the benchmark's 0.2 bound.
 
 The enrich logic runs exactly where live HTTP would: it computes the
 deterministic synthetic response time (webgen page_resp_ms) and simulates
@@ -31,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from ..functions.backoff import total_retry_backoff_ms
+from ..functions.pyworker import forget_zip_finders
 from ..synthetic.webgen import page_resp_ms
 
 PAYLOAD_COLS = ("bytes", "w", "h", "fmt", "caption", "phash")
@@ -160,6 +170,7 @@ def fetch_process(
         )
 
     def process(batches):
+        forget_zip_finders()
         # real mode: one requests.Session opened here, reused across batches
         for pdf in batches:
             resp, att, back, links = [], [], [], []
@@ -256,6 +267,7 @@ def _live_fetch(
     match = python_conjunction(list(matcher_names))
 
     def process(batches):
+        forget_zip_finders()
         import socket as _socket
         import time as _time
         import urllib.error as _err

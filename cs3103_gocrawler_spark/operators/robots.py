@@ -22,6 +22,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions.pyworker import forget_zip_finders
+
 ROBOTS_SCHEMA = "host string, disallow_prefixes array<string>, crawl_delay_ms long"
 
 
@@ -108,6 +110,7 @@ def fetch_robots(hosts: DataFrame, http, user_agent: str | None = None) -> DataF
     proxy = getattr(http, "proxy", None)
 
     def proc(batches):
+        forget_zip_finders()
         import urllib.request as _rq
         from urllib.parse import urlsplit
 

@@ -28,6 +28,10 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores the row schema (JSON)
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _rdir(kind: str, round_id: int) -> str:
@@ -109,24 +113,53 @@ class RoundCatalog:
         df.write.mode("overwrite").parquet(p)
         return p
 
-    def write_empty(self, kind: str, round_id: int, arrow_schema) -> str:
+    def write_empty(self, kind: str, round_id: int, schema: StructType) -> str:
         """Commit an empty table without a Spark job — a 1-task Spark write of
         a provably-empty DataFrame still costs a full job round-trip (~0.5-1 s
-        of scheduler overhead), a pure serial tax on short rounds. The schema
-        must match what the Spark path would have written."""
+        of scheduler overhead), a pure serial tax on short rounds. ``schema``
+        is the Spark schema the Spark path would have written; it goes into
+        the footer under Spark's own key, so ``read`` takes it from there
+        like from any Spark-written table."""
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         p = self.path(kind, round_id)
         shutil.rmtree(p, ignore_errors=True)
         os.makedirs(p)
+        arrow_schema = to_arrow_schema(schema).with_metadata(
+            {SPARK_SCHEMA_KEY: schema.json()}
+        )
         pq.write_table(
             arrow_schema.empty_table(), os.path.join(p, "part-00000.parquet")
         )
         open(os.path.join(p, "_SUCCESS"), "w").close()
         return p
 
+    def _parquet(self, dirs: list[str]) -> DataFrame:
+        """Read committed table dirs with the schema from a parquet footer.
+
+        Without a schema, every ``spark.read.parquet`` runs a one-task
+        schema-inference job (plus a listing and footer reads) before the
+        query is even planned: ~20 ms of job and 65-70 ms per read at
+        ``local[4]``, against 8-15 ms and no job with the schema given. A
+        round reads three tables. Tables whose footers lack Spark's schema
+        key (written by something else) fall back to inference."""
+        import pyarrow.parquet as pq
+
+        reader = self.spark.read
+        for d in dirs:
+            files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+            if files:
+                meta = pq.read_metadata(os.path.join(d, files[0])).metadata or {}
+                if SPARK_SCHEMA_KEY in meta:
+                    reader = reader.schema(
+                        StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+                    )
+                break
+        return reader.parquet(*dirs)
+
     def read(self, kind: str, round_id: int) -> DataFrame:
-        return self.spark.read.parquet(self.path(kind, round_id))
+        return self._parquet([self.path(kind, round_id)])
 
     def exists(self, kind: str, round_id: int) -> bool:
         return os.path.exists(os.path.join(self.path(kind, round_id), "_SUCCESS"))
@@ -144,7 +177,7 @@ class RoundCatalog:
         )
         if not dirs:
             return None
-        return self.spark.read.parquet(*[os.path.join(base, d) for d in dirs])
+        return self._parquet([os.path.join(base, d) for d in dirs])
 
     def count(self, kind: str, round_id: int) -> int:
         """Row count from parquet footer metadata — no Spark job. Each

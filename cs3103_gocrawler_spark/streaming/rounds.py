@@ -30,12 +30,17 @@ visited/rejected/seen/validation are *views* over the fetched table
 (column-pruned, predicate-filtered parquet reads), not extra
 materializations; payload validation runs inside the fetch pass (the payload
 reaches a Python worker exactly once and never re-joins); per-round metrics
-are buffered into the manifest and written as a table once at the end. Each
-write still runs several Spark jobs (AQE query stages, the children
-pipeline): traced crawlbench runs count ~7.3 jobs per round on wide-bfs and
-12.75 on polite-deep (``rounds.spark_jobs_per_round``, seed 101, local[4],
-4 vCPUs). Outside live-robots mode, which fetches new hosts' robots.txt in
-its own pass, the fused fetch pass is the round's only Python stage.
+are buffered into the manifest, with each round's phase seconds, and
+written as a table once at the end. The round's three catalog reads
+(pending, the fetched re-read, the seen set) take their schema from a
+parquet footer and start no job; each used to run a schema-inference job.
+Each write still runs several Spark jobs (AQE query stages, the children
+pipeline): traced crawlbench runs count ~4.7 jobs per round on wide-bfs and
+9.75 on polite-deep (``rounds.spark_jobs_per_round``, seed 101, local[4],
+4 vCPUs; ~7.3 and 12.75 with the inference jobs). Outside live-robots mode,
+which fetches new hosts' robots.txt in its own pass, the fused fetch pass
+is the round's only Python stage; like every worker-side function of the
+engine it first drops the worker's zip finders (``functions/pyworker.py``).
 
 Determinism: every output table has an order-insensitive definition; the
 recorded crawl ordering (W3) is ``row_number() OVER (PARTITION BY host ORDER
@@ -45,6 +50,7 @@ which is the two-cluster-size check's requirement (§4.2.4).
 
 from __future__ import annotations
 
+import math
 import time
 from dataclasses import dataclass
 from functools import reduce
@@ -69,17 +75,6 @@ _OUTCOMES = ("ok", "matcher", "fetch_error")
 # modulus of the fetched table's host_bucket column
 N_HOST_BUCKETS = 64
 
-
-def _frontier_arrow_schema(frontier_df):
-    """Arrow schema for driver-side empty-frontier commits, derived from the
-    ACTUAL frontier DataFrame — a hardcoded literal here once drifted from
-    engines constructed with e.g. long-typed seed priorities (createDataFrame
-    from Python ints bypassing the CLI's int32 cast), committing an
-    int32-priority terminal round into a long-priority table."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(frontier_df.schema)
-
 VISITED_COLS = [
     "url", "host", "path", "url_sha1", "depth", "parent", "priority", "links",
     "resp_ms", "attempts", "backoff_ms", "round_id", "partition_id", "host_bucket",
@@ -89,6 +84,10 @@ METRIC_KEYS = [
     "round_id", "pending", "dequeued", "fetched_ok", "rejected",
     "new_urls", "deferred", "elapsed_ms",
 ]
+
+# phase seconds each round's manifest record carries under "timings" (the
+# manifest commit itself is timed too, but only in run()'s history)
+PHASE_KEYS = ("read_pending", "fetch_extract_write", "frontier_write", "frontier_count")
 
 
 @dataclass
@@ -168,6 +167,10 @@ class CrawlConfig:
         b = self.budget_per_host
         if b is None:
             return
+        if not math.isfinite(b):
+            # under carryover NaN and inf pass the >= 0.5 check below, and
+            # round 0 then fails at int(2 * b), after the JVM has started
+            raise ValueError(f"budget_per_host must be finite (got {b})")
         if self.politeness_carryover:
             # balance is capped at one budget, so allowance = balance + b
             # never reaches 1 when b < 0.5: every round would dequeue 0 and
@@ -569,7 +572,9 @@ class CrawlEngine:
             # commit the empty table driver-side — a Spark write of an empty
             # DF still costs a full job of scheduler overhead, which
             # dominates the depth-capped final round of a saturated crawl
-            self.cat.write_empty("frontier", r + 1, _frontier_arrow_schema(pending))
+            # pending's schema, not a literal: a hardcoded one once drifted
+            # from engines seeded with long-typed priorities
+            self.cat.write_empty("frontier", r + 1, pending.schema)
         _mark("frontier_write")
         next_n = self.cat.count("frontier", r + 1)
         _mark("frontier_count")
@@ -585,6 +590,7 @@ class CrawlEngine:
             "new_urls": int(next_n - deferred_n),
             "deferred": int(deferred_n),
             "elapsed_ms": int((time.monotonic() - t0) * 1000),
+            "timings": dict(timings),
         }
         man = self.cat.manifest() or {"metrics": []}
         metrics = [x for x in man.get("metrics", []) if x["round_id"] < r] + [m]

@@ -61,7 +61,11 @@ def main() -> None:
     ap.add_argument("--report", default=None, help="write the JSON crawl report here (S7)")
     args = ap.parse_args()
 
-    from cs3103_gocrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine
+    from cs3103_gocrawler_spark.streaming.rounds import (
+        PHASE_KEYS,
+        CrawlConfig,
+        CrawlEngine,
+    )
 
     # validate the config before a JVM starts: a bad budget is a usage error
     budget = args.budget_per_host
@@ -133,6 +137,11 @@ def main() -> None:
         "wall_sec": round(wall, 3),
         "urls_per_sec": round(dequeued / wall, 1) if wall else None,
         "parallelism": spark.sparkContext.defaultParallelism,
+        # per-phase seconds summed over this run's rounds
+        "phase_s": {
+            k: round(sum(h.get("timings", {}).get(k, 0.0) for h in hist), 3)
+            for k in PHASE_KEYS
+        },
     }))
     spark.stop()
 

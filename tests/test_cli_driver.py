@@ -11,7 +11,7 @@ import sys
 import pytest
 
 from cs3103_gocrawler_spark.plans.report import write_report
-from cs3103_gocrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine
+from cs3103_gocrawler_spark.streaming.rounds import PHASE_KEYS, CrawlConfig, CrawlEngine
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DRIVER = os.path.join(REPO, "scripts", "crawl_driver.py")
@@ -50,6 +50,8 @@ def test_cli_robots_gate(spark, tiny_web, tmp_path):
     summary = _run_cli(web_dir, str(tmp_path / "cli_state_robots"), report_path,
                        ["--robots", "--max-depth", "4", "--budget-per-host", "3"])
     assert summary["urls_dequeued"] > 0
+    assert set(summary["phase_s"]) == set(PHASE_KEYS)
+    assert all(v >= 0 for v in summary["phase_s"].values()), summary
 
     pages = spark.read.parquet(f"{web_dir}/pages.parquet")
     seeds = spark.read.parquet(f"{web_dir}/seeds.parquet")
@@ -102,14 +104,20 @@ def test_cli_report_matches_engine(spark, tiny_web, tmp_path, name, cli, cfg_kw)
     assert len(cli_report["page_info"]) == summary["urls_fetched_ok"]
 
 
-@pytest.mark.parametrize("budget", ["2.5", "0"])
-def test_cli_bad_budget_is_usage_error(tmp_path, budget):
-    """A budget CrawlConfig refuses (fractional without --carryover, or
-    below 1) exits 2 with usage before a JVM starts. JAVA_HOME points
-    nowhere, so a driver that started one would fail another way."""
+@pytest.mark.parametrize("budget, extra", [
+    pytest.param("2.5", [], id="2.5"),
+    pytest.param("0", [], id="0"),
+    pytest.param("nan", ["--carryover"], id="nan-carryover"),
+    pytest.param("inf", ["--carryover"], id="inf-carryover"),
+])
+def test_cli_bad_budget_is_usage_error(tmp_path, budget, extra):
+    """A budget CrawlConfig refuses (fractional without --carryover, below
+    1, or not finite) exits 2 with usage before a JVM starts. JAVA_HOME
+    points nowhere, so a driver that started one would fail another way."""
     p = subprocess.run(
         [sys.executable, DRIVER, "--web-dir", str(tmp_path / "missing"),
-         "--state-dir", str(tmp_path / "state"), "--budget-per-host", budget],
+         "--state-dir", str(tmp_path / "state"), "--budget-per-host", budget,
+         *extra],
         capture_output=True, text=True, timeout=120,
         env={**os.environ, "JAVA_HOME": str(tmp_path / "no-java")},
     )

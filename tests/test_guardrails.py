@@ -26,6 +26,12 @@ def test_budget_below_one_rejected():
         with pytest.raises(ValueError, match="livelock"):
             CrawlConfig(budget_per_host=b)
     CrawlConfig(budget_per_host=1)
+    # NaN and inf slip past the comparisons; under carryover round 0 would
+    # fail at int(2 * budget), after the JVM has started
+    for b in (float("nan"), float("inf"), float("-inf")):
+        for carryover in (False, True):
+            with pytest.raises(ValueError, match="finite"):
+                CrawlConfig(budget_per_host=b, politeness_carryover=carryover)
 
 
 def test_fractional_budget_without_carryover_rejected():
