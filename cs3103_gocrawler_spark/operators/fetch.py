@@ -82,6 +82,7 @@ def fetch_process(
     extractor=None,
     http: HttpConfig | None = None,
     matcher_names: tuple[str, ...] = ("html",),
+    columns: dict | None = None,
 ) -> DataFrame:
     """The fused per-round fetch pipeline — fetch join + enrich + link
     extraction (+ inline payload validation) in ONE ``mapInPandas`` pass.
@@ -107,7 +108,8 @@ def fetch_process(
 
     Output = input cols (minus payload; ``fmt`` kept as lineage) plus
     ``found, outcome, resp_ms, attempts, backoff_ms, links`` and, when
-    ``validate``, the validation columns; ``partition_id`` lineage appended.
+    ``validate``, the validation columns; ``partition_id`` lineage appended,
+    then ``columns`` (name → Column) in the same projection.
     """
     from .extract import make_scoped_extractor
     from .validate import VALIDATION_COL_NAMES, _validate_row
@@ -117,6 +119,8 @@ def fetch_process(
     # and the three example-app scopes come from extract.make_scoped_extractor
     if extractor is None:
         extractor = make_scoped_extractor(blacklist=blacklist)
+    # partition_id lineage, then the caller's columns: one projection
+    tail = {"partition_id": F.spark_partition_id(), **(columns or {})}
 
     if http is not None:
         if validate:
@@ -128,15 +132,20 @@ def fetch_process(
             dequeued, http=http, matcher_names=matcher_names,
             max_retries=max_retries, backoff_policy=backoff_policy,
             extractor=extractor,
-        )
+        ).withColumns(tail)
 
     cols = ["status", "content_type", "body_html"] + (
         list(PAYLOAD_COLS) if validate else []
     )
     pruned = pages.select(F.col("image_id").alias("url"), *cols)
-    joined = dequeued.join(pruned, "url", "left").withColumn(
-        "found", F.col("status").isNotNull()
-    )
+    found = F.col("status").isNotNull()
+    ok = found & (matcher if matcher is not None else F.lit(True))
+    derived = {
+        "found": found,
+        "outcome": F.when(~found, F.lit("fetch_error"))
+        .when(~ok, F.lit("matcher"))
+        .otherwise(F.lit("ok")),
+    }
     if validate:
         # phash crosses as a decimal string: Arrow→pandas turns a nullable
         # int64 column into float64 whenever a batch mixes fetch misses
@@ -144,14 +153,8 @@ def fetch_process(
         # exact and misses stay None. Cast after the join: a cast in the
         # pages projection raises that side's size estimate and can flip
         # the join from broadcast to sort-merge.
-        joined = joined.withColumn("phash", F.col("phash").cast("string"))
-    ok = F.col("found") & (matcher if matcher is not None else F.lit(True))
-    joined = joined.withColumn(
-        "outcome",
-        F.when(~F.col("found"), F.lit("fetch_error"))
-        .when(~ok, F.lit("matcher"))
-        .otherwise(F.lit("ok")),
-    )
+        derived["phash"] = F.col("phash").cast("string")
+    joined = dequeued.join(pruned, "url", "left").withColumns(derived)
 
     big = {"body_html"} | (set(PAYLOAD_COLS) - {"fmt"} if validate else set())
     keep = [f.name for f in joined.schema.fields if f.name not in big]
@@ -219,9 +222,7 @@ def fetch_process(
             )
             yield out[out_names]
 
-    return joined.mapInPandas(process, schema=out_schema).withColumn(
-        "partition_id", F.spark_partition_id()
-    )
+    return joined.mapInPandas(process, schema=out_schema).withColumns(tail)
 
 
 def _live_fetch(
@@ -362,6 +363,4 @@ def _live_fetch(
                 cols["links"].append(extractor(url, body) if ok else None)
             yield pdf[in_names].assign(**cols)
 
-    return dequeued.mapInPandas(process, schema=out_schema).withColumn(
-        "partition_id", F.spark_partition_id()
-    )
+    return dequeued.mapInPandas(process, schema=out_schema)

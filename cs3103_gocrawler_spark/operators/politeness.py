@@ -53,7 +53,8 @@ def dequeue(
     budget_per_host: int | None,
     salt_buckets: int = 16,
     host_takes: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
+    deferred: bool = True,
+) -> tuple[DataFrame, DataFrame | None]:
     """Split pending into (dequeued, deferred). ``budget_per_host=None``
     dequeues everything (pure BFS — the reference's unbounded fan-out).
 
@@ -66,10 +67,14 @@ def dequeue(
     to its top ``budget_per_host`` before the host exchange (module
     docstring), so a caller must pass one no take exceeds.
 
+    ``deferred=False`` builds no deferred side and returns None in its
+    place (the engine derives the deferred rows with its frontier
+    anti-join).
+
     ``salt_buckets`` is unused: kept for crawlbench until ROADMAP item 2
     (its dequeue replay passes it positionally)."""
     if budget_per_host is None and host_takes is None:
-        return pending, pending.limit(0)
+        return pending, pending.limit(0) if deferred else None
 
     if budget_per_host is not None and not float(budget_per_host).is_integer():
         # fractional budgets only make sense with the carryover balance,
@@ -96,5 +101,6 @@ def dequeue(
         within_take = F.col("take").isNull() | (rank <= F.col("take"))
         keep = within_take if keep is None else keep & within_take
     dequeued = ranked.filter(keep).drop("_rank", "take")
-    deferred = ranked.filter(~keep).drop("_rank", "take")
-    return dequeued, deferred
+    if not deferred:
+        return dequeued, None
+    return dequeued, ranked.filter(~keep).drop("_rank", "take")

@@ -287,7 +287,8 @@ def filter_unseen(
     bloom: Bloom | None,
     segments: DataFrame | None = None,
     probe_salt: int = 8,
-) -> tuple[DataFrame, DataFrame]:
+    survivors: bool = True,
+) -> tuple[DataFrame, DataFrame | None]:
     """Return (unseen_candidates, maybe_seen_survivors_for_fp_metric).
 
     ``candidates`` must carry ``url`` + ``url_sha1``; ``seen`` carries ``url``.
@@ -297,16 +298,20 @@ def filter_unseen(
     ``segments`` (the persisted ``bloom_segments`` delta table) selects the
     partitioned probe tier; ``bloom`` then only supplies the filter geometry
     (m_seg, k, S) and its bit array is neither read nor broadcast.
+
+    Without a bloom the second value is empty, and ``survivors=False``
+    returns None in its place instead of building an empty plan.
     """
     if seen is None:
-        return candidates, candidates.limit(0)
+        return candidates, candidates.limit(0) if survivors else None
     if segments is not None and bloom is not None:
         flagged = probe_with_segments(
             candidates, segments, int(bloom.m_seg), bloom.k, bloom.s,
             probe_salt=probe_salt,
         )
     elif bloom is None or bloom.n_added == 0:
-        return candidates.join(seen.select("url"), "url", "left_anti"), candidates.limit(0)
+        exact = candidates.join(seen.select("url"), "url", "left_anti")
+        return exact, candidates.limit(0) if survivors else None
     else:
         # broadcast tier: one broadcast of the driver bit array per probing
         # round
@@ -320,8 +325,8 @@ def filter_unseen(
 
         flagged = candidates.withColumn("_maybe", might_contain(F.col("url_sha1")))
     definitely_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
-    survivors = (
+    false_pos = (
         flagged.filter(F.col("_maybe")).drop("_maybe")
         .join(seen.select("url"), "url", "left_anti")
     )
-    return definitely_new.unionByName(survivors), survivors
+    return definitely_new.unionByName(false_pos), false_pos

@@ -98,7 +98,7 @@ class RoundCatalog:
     def commit_round(self, round_id: int, extra: dict | None = None) -> None:
         """Atomic rename makes the round durable — a crash before this leaves
         the previous manifest intact and the partial round is re-run on resume."""
-        payload = {"last_round": round_id, **(extra or {})}
+        payload = {**(extra or {}), "last_round": round_id}
         fd, tmp = tempfile.mkstemp(dir=self.state_dir, suffix=".manifest")
         with os.fdopen(fd, "w") as f:
             json.dump(payload, f)

@@ -12,9 +12,9 @@ One round replaces one wave of the reference's goroutine tree
             → write fetched_r                               │
                        ↑ the ONE materialization point      │
     children = explode(links) → url columns on the JVM      │
-             → robots gate                                  │
     frontier_{r+1} = min-(depth,parent) merge(frontier_r ∪  │  (A5)
-        children) → exact anti-join vs seen(≤ r)            │  (J1)
+        children) → robots gate → exact anti-join vs        │
+        seen(≤ r)                                           │  (J1)
     manifest commit = checkpoint
 
 Job discipline: the round's per-URL work rides two writes — the fetched
@@ -34,10 +34,23 @@ are buffered into the manifest, with each round's phase seconds, and
 written as a table once at the end. The round's three catalog reads
 (pending, the fetched re-read, the seen set) take their schema from a
 parquet footer and start no job; each used to run a schema-inference job.
-Each write still runs several Spark jobs (AQE query stages, the children
-pipeline): traced crawlbench runs count ~4.7 jobs per round on wide-bfs and
-9.75 on polite-deep (``rounds.spark_jobs_per_round``, seed 101, local[4],
-4 vCPUs; ~7.3 and 12.75 with the inference jobs). Outside live-robots mode,
+Each write runs one Spark job per AQE query stage, in two waves. The
+fetched write's first wave holds the dequeue's host shuffle and the pages
+(and delay-cap takes) broadcasts, its second the fused pass and the write.
+The frontier write's first wave holds the merge's shuffle map stage and the
+robots and seen broadcasts, its second the merge, the gate, the anti-join
+and the write; the gate sits above the merge (pending rows passed it
+already, and it is a per-URL predicate), because below it the merge's map
+stage waited for the robots broadcast, a third wave. Traced crawlbench runs
+(seed 101, local[4], 4 vCPUs) count 8.75 jobs per round on polite-deep and
+4.67 on wide-bfs (``rounds.spark_jobs_per_round``, which also counts the
+crawl's start-up jobs; 9.75 and 4.67 before the start-up changes below; the
+gate move saves a wave, not a job). Building an engine and resuming one
+start no job: whether any host has a positive delay is decided once per
+crawl, by an observed metric of the frontier-0 write's robots broadcast,
+and kept in the manifest. Columns every round
+reuses are built once per engine, since each ``F.*`` or Column call is a
+Py4J round trip or more. Outside live-robots mode,
 which fetches new hosts' robots.txt in its own pass, the fused fetch pass
 is the round's only Python stage; like every worker-side function of the
 engine it first drops the worker's zip finders (``functions/pyworker.py``).
@@ -58,7 +71,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..operators.canonicalize import with_canonical, with_url_columns
+from ..operators.canonicalize import url_columns, with_canonical
 from ..operators.fetch import fetch_process
 from ..operators.matchers import conjunction
 from ..operators.politeness import dequeue
@@ -211,7 +224,6 @@ class CrawlEngine:
         self.pages = pages
         self.cfg = config
         self.cat = RoundCatalog(spark, state_dir)
-        self.robots = robots
         # kept for crawlbench until ROADMAP item 2: its filter_unseen replay
         # reads it; the engine does not
         self.bloom_mode = config.bloom_mode
@@ -234,10 +246,43 @@ class CrawlEngine:
                 )
             # resume path: a previous run's accumulated robots dim persists
             # as catalog deltas; re-read instead of re-fetching
-            self.robots = self.cat.read_all("robots")
-        # (host, cap) dim from robots crawl_delay_ms — None when no host has
-        # a positive delay, so the default path pays no extra join
-        self._delay_caps = self._delay_caps_from(self.robots)
+            robots = self.cat.read_all("robots")
+        self._set_robots(robots)
+        # Columns every round reuses, built once: each F.* or Column call is
+        # one or more Py4J round trips, and so is the JVM object's release
+        self._matcher = conjunction(list(config.matchers))
+        # the fetched write's observed metrics and its added host_bucket
+        self._observed = [
+            F.min("depth").alias("min_depth"),
+            *[
+                F.sum(F.when(F.col("outcome") == o, 1).otherwise(0)).alias(o)
+                for o in _OUTCOMES
+            ],
+        ]
+        self._host_bucket = F.pmod(
+            F.xxhash64("host"), F.lit(N_HOST_BUCKETS)
+        ).cast("int")
+        # children: the ok rows below the depth cap spawn one row per link
+        # (J5 edge construction — parent rides the row, no join needed)
+        depth_cap = config.max_depth - 1  # crawler.go:59
+        self._spawns = (F.col("outcome") == "ok") & (F.col("depth") + 1 <= depth_cap)
+        self._child_cols = [
+            F.col("url").alias("parent"),
+            F.explode("links").alias("url"),
+            (F.col("depth") + 1).alias("depth"),
+            F.col("priority"),
+        ]
+        self._url_columns = url_columns()
+        # A5 min-merge: deterministic first-writer-wins, the
+        # lexicographically smallest (depth, parent) and priority per URL
+        # (SURVEY §1.3), in the frontier table's column order
+        dp = F.min(F.struct("depth", "parent"))
+        self._merge_aggs = [
+            *[F.first(c).alias(c) for c in ("host", "path", "url_sha1")],
+            dp.getField("depth").alias("depth"),
+            dp.getField("parent").alias("parent"),
+            F.min("priority").alias("priority"),
+        ]
         if config.extractor is not None:
             self._extractor = canonicalizing(config.extractor)
         else:
@@ -248,13 +293,33 @@ class CrawlEngine:
                 path_includes=tuple(config.scope_path_includes),
             )
 
+    def _set_robots(self, robots: DataFrame | None) -> None:
+        """Point the engine at a robots dim. The gate's broadcast dim and
+        keep predicate and the delay-caps plan are built here, once per dim,
+        not once per round; whether any host has a positive delay is left
+        undecided (``_active_delay_caps``)."""
+        self.robots = robots
+        self._delay_caps = self._delay_caps_from(robots)
+        self._has_delays: bool | None = None
+        self._gate = None
+        if robots is not None:
+            blocked = F.exists(
+                F.coalesce(F.col("disallow_prefixes"), F.array()),
+                lambda p: F.col("path").startswith(p),
+            )
+            self._gate = (
+                F.broadcast(robots.select("host", "disallow_prefixes")), ~blocked
+            )
+
     def _delay_caps_from(self, robots: DataFrame | None) -> DataFrame | None:
         """(host, cap) from robots crawl_delay_ms: a host with delay d may be
         fetched max(1, round_target_ms // d) times per round (CrawlConfig
-        docstring). None when no host has a positive delay."""
+        docstring). None when the dim has no crawl_delay_ms column. This is
+        a plan and starts no job: whether it has a row at all is decided by
+        ``_active_delay_caps``, once per crawl."""
         if robots is None or "crawl_delay_ms" not in robots.columns:
             return None
-        caps = robots.filter(F.col("crawl_delay_ms") > 0).select(
+        return robots.filter(F.col("crawl_delay_ms") > 0).select(
             "host",
             F.greatest(
                 F.lit(1),
@@ -263,7 +328,23 @@ class CrawlEngine:
                 ),
             ).cast("int").alias("cap"),
         )
-        return caps if caps.limit(1).count() > 0 else None
+
+    def _active_delay_caps(self) -> DataFrame | None:
+        """The delay caps when some host has a positive delay, else None, so
+        a crawl without delays plans no takes join. ``init_frontier`` takes
+        the answer from an observed metric of its own write and keeps it in
+        the manifest (``has_delays``), and ``run()`` reads it back, so
+        neither building an engine, starting the crawl nor resuming it
+        starts a job for it. The robots dim is part of the crawl's
+        definition, like its pages and config: a resumed engine gets the dim
+        the crawl started with. A live-robots dim grows each round, so it is
+        decided again after each refresh, by one ``isEmpty()`` job (none for
+        a driver-local dim), as is a manifest without the answer."""
+        if self._delay_caps is None:
+            return None
+        if self._has_delays is None:
+            self._has_delays = not self._delay_caps.isEmpty()
+        return self._delay_caps if self._has_delays else None
 
     # -------------------------------------------------------------- views
     def fetched_df(self, up_to_round: int | None = None) -> DataFrame | None:
@@ -322,38 +403,33 @@ class CrawlEngine:
     # ------------------------------------------------------------------ setup
     def init_frontier(self, seeds: DataFrame) -> None:
         """Round-0 frontier from seeds(url, priority) — S1 (explorer main.go:57-65)."""
-        f = (
-            with_canonical(seeds)
-            .filter(~F.col("host").isin(list(self._blacklist)) if self._blacklist else F.lit(True))
-            .withColumn("depth", F.lit(0))
-            .withColumn("parent", F.lit(""))
-        )
+        f = with_canonical(seeds)
+        if self._blacklist:
+            f = f.filter(~F.col("host").isin(list(self._blacklist)))
+        f = f.withColumns({"depth": F.lit(0), "parent": F.lit("")})
         if self.cfg.live_robots:
             self._refresh_live_robots(f, 0)
-        f = self._robots_gate(f)
-        f = self._min_merge(f)
-        self.cat.write(f, "frontier", 0)
-        self.cat.commit_round(-1, {"metrics": []})
+        delays = robots = None
+        if self._delay_caps is not None and not self.cfg.live_robots:
+            # whether any host has a positive delay rides this write as an
+            # observed metric of the gate's robots broadcast, which reads
+            # the whole dim: the decision starts no job of its own
+            delays = Observation("has_delays")
+            robots = self.robots.observe(
+                delays, F.count_if(F.col("crawl_delay_ms") > 0).alias("n")
+            )
+        self.cat.write(self._robots_gate(self._min_merge(f), robots), "frontier", 0)
+        extra: dict = {"metrics": []}
+        # an empty frontier 0 may plan the broadcast away, and it ends the
+        # crawl before any dequeue needs the answer
+        if delays is not None and self.cat.count("frontier", 0) > 0:
+            extra["has_delays"] = delays.get["n"] > 0
+        self.cat.commit_round(-1, extra)
 
-    @staticmethod
-    def _min_merge(df: DataFrame) -> DataFrame:
+    def _min_merge(self, df: DataFrame) -> DataFrame:
         """A5 — deterministic first-writer-wins: keep the lexicographically
         smallest (depth, parent) and priority per URL (SURVEY §1.3)."""
-        return (
-            df.groupBy("url")
-            .agg(
-                F.min(F.struct("depth", "parent")).alias("_dp"),
-                F.min("priority").alias("priority"),
-                F.first("host").alias("host"),
-                F.first("path").alias("path"),
-                F.first("url_sha1").alias("url_sha1"),
-            )
-            .select(
-                "url", "host", "path", "url_sha1",
-                F.col("_dp.depth").alias("depth"), F.col("_dp.parent").alias("parent"),
-                "priority",
-            )
-        )
+        return df.groupBy("url").agg(*self._merge_aggs)
 
     def _host_allowance(self, r: int, pending: DataFrame) -> DataFrame:
         """(host, allowance) for every host in pending ∪ host_state — the
@@ -395,9 +471,10 @@ class CrawlEngine:
                 "host", F.floor("allowance").cast("int").alias("take")
             )
             budget_arg = int(2 * cfg.budget_per_host)
-        if self._delay_caps is not None:
+        caps = self._active_delay_caps()
+        if caps is not None:
             if takes is not None:
-                takes = takes.join(self._delay_caps, "host", "left").select(
+                takes = takes.join(caps, "host", "left").select(
                     "host",
                     F.least(
                         F.col("take"), F.coalesce(F.col("cap"), F.col("take"))
@@ -405,7 +482,7 @@ class CrawlEngine:
                 )
             else:
                 b = cfg.budget_per_host
-                takes = self._delay_caps.select(
+                takes = caps.select(
                     "host",
                     (F.least(F.lit(int(b)), F.col("cap")) if b is not None
                      else F.col("cap")).alias("take"),
@@ -425,21 +502,20 @@ class CrawlEngine:
         if known is not None:
             hosts = hosts.join(known.select("host"), "host", "left_anti")
         self.cat.write(fetch_robots(hosts, self.cfg.http), "robots", delta_round)
-        self.robots = self.cat.read_all("robots", up_to_round=delta_round)
-        self._delay_caps = self._delay_caps_from(self.robots)
+        self._set_robots(self.cat.read_all("robots", up_to_round=delta_round))
 
-    def _robots_gate(self, df: DataFrame) -> DataFrame:
+    def _robots_gate(self, df: DataFrame, robots: DataFrame | None = None) -> DataFrame:
         """Drop URLs whose path matches a disallow prefix for their host
-        (north_rule robots gating; broadcast dim join — no reference analog)."""
-        if self.robots is None:
+        (north_rule robots gating; broadcast dim join — no reference analog).
+        Keeps ``df``'s column order (the join would put ``host`` first).
+        ``robots``, a plan over the engine's dim (``init_frontier`` passes an
+        observed one), stands in for the dim built once in ``_set_robots``."""
+        if self._gate is None:
             return df
-        r = F.broadcast(self.robots.select("host", "disallow_prefixes"))
-        joined = df.join(r, "host", "left")
-        blocked = F.exists(
-            F.coalesce(F.col("disallow_prefixes"), F.array()),
-            lambda p: F.col("path").startswith(p),
-        )
-        return joined.filter(~blocked).drop("disallow_prefixes")
+        dim, keep = self._gate
+        if robots is not None:
+            dim = F.broadcast(robots.select("host", "disallow_prefixes"))
+        return df.join(dim, "host", "left").filter(keep).select(*df.columns)
 
     # ------------------------------------------------------------------ rounds
     def _run_round(self, r: int) -> dict:
@@ -460,8 +536,8 @@ class CrawlEngine:
             return {"round_id": r, "pending": 0, "terminated": True}
 
         takes, allowance, budget_arg = self._host_takes(r, pending)
-        # the deferred side is never read: the frontier anti-join yields it
-        dequeued, _ = dequeue(pending, budget_arg, host_takes=takes)
+        # the deferred side is not built: the frontier anti-join yields it
+        dequeued, _ = dequeue(pending, budget_arg, host_takes=takes, deferred=False)
 
         # fused fetch+enrich+extract(+validate): body/payload cross the
         # JVM↔Python pipe exactly once and are dropped inside the worker
@@ -469,7 +545,7 @@ class CrawlEngine:
         processed = (
             fetch_process(
                 dequeued, self.pages,
-                matcher=conjunction(list(cfg.matchers)),
+                matcher=self._matcher,
                 blacklist=self._blacklist,
                 max_retries=cfg.max_retries,
                 resp_seed=cfg.gen_seed,
@@ -478,25 +554,14 @@ class CrawlEngine:
                 extractor=self._extractor,
                 http=cfg.http,
                 matcher_names=tuple(cfg.matchers),
-            )
-            .withColumn("round_id", F.lit(r))
-            .withColumn(
-                "host_bucket",
-                F.pmod(F.xxhash64("host"), F.lit(N_HOST_BUCKETS)).cast("int"),
+                columns={"round_id": F.lit(r), "host_bucket": self._host_bucket},
             )
         )
         # outcome counts + min depth ride the write job as observed metrics
         # (accumulators, no extra job). A re-run stage may count them twice,
         # so the frontier takes the dequeued count from the fetched footer
         obs = Observation(f"round_{r}")
-        processed = processed.observe(
-            obs,
-            F.min("depth").alias("min_depth"),
-            *[
-                F.sum(F.when(F.col("outcome") == o, 1).otherwise(0)).alias(o)
-                for o in _OUTCOMES
-            ],
-        )
+        processed = processed.observe(obs, *self._observed)
         # the ONE expensive materialization of the round
         self.cat.write(processed, "fetched", r)
         _mark("fetch_extract_write")
@@ -524,7 +589,6 @@ class CrawlEngine:
             )
             self.cat.write(new_state, "host_state", r + 1)
 
-        frontier_cols = ["url", "host", "path", "url_sha1", "depth", "parent", "priority"]
         depth_cap = cfg.max_depth - 1  # crawler.go:59
         # skip the whole children pipeline (explode → robots → anti-join)
         # when no dequeued row can spawn — the depth-capped final round
@@ -538,33 +602,35 @@ class CrawlEngine:
         # exactly the deferred ones
         candidates = []
         if deferred_n > 0:
-            candidates.append(pending.select(*frontier_cols))
+            candidates.append(pending)
         if can_spawn:
-            # children: J5 edge construction — parent rides the row, no join needed
-            visited_r = processed.filter(F.col("outcome") == "ok")
+            # links are canonical: only their url columns are derived
             children = (
-                visited_r.filter(F.col("depth") + 1 <= depth_cap)
-                .select(
-                    F.col("url").alias("parent"),
-                    F.explode("links").alias("url"),
-                    (F.col("depth") + 1).alias("depth"),
-                    "priority",
-                )
+                processed.filter(self._spawns)
+                .select(*self._child_cols)
+                .withColumns(self._url_columns)
             )
-            children = with_url_columns(children)  # links are canonical
             if cfg.live_robots:
                 # fetch rules for hosts first seen among this round's
                 # children BEFORE they are gated / enter frontier r+1
                 self._refresh_live_robots(children, r + 1)
             # no persist: the frontier write below is the children's only
             # reader (live robots reads the ungated children in its own job)
-            candidates.append(self._robots_gate(children).select(*frontier_cols))
+            candidates.append(children)
         if candidates:
             # merge first: below the merge, Catalyst pushes the anti-join
-            # into each union branch and joins the seen side twice
+            # into each union branch and joins the seen side twice. The gate
+            # sits above the merge too: pending rows passed it already and
+            # it is a per-URL predicate, so the rows are the same, and the
+            # merge's shuffle map stage runs beside the robots and seen
+            # broadcasts instead of after the robots one. Pending alone
+            # needs no gate
             merged = self._min_merge(reduce(DataFrame.unionByName, candidates))
+            if can_spawn:
+                merged = self._robots_gate(merged)
             unseen, _ = filter_unseen(
-                self.spark, merged, self.seen_urls(up_to_round=r), None
+                self.spark, merged, self.seen_urls(up_to_round=r), None,
+                survivors=False,
             )
             self.cat.write(unseen, "frontier", r + 1)
         else:
@@ -594,7 +660,8 @@ class CrawlEngine:
         }
         man = self.cat.manifest() or {"metrics": []}
         metrics = [x for x in man.get("metrics", []) if x["round_id"] < r] + [m]
-        self.cat.commit_round(r, {"metrics": metrics})
+        # the other keys (has_delays) carry over to the next record
+        self.cat.commit_round(r, {**man, "metrics": metrics})
         _mark("commit")
         return {**m, "terminated": next_n == 0, "timings": timings}
 
@@ -634,6 +701,8 @@ class CrawlEngine:
         if man is None:
             raise RuntimeError("call init_frontier(seeds) first")
         start = man["last_round"] + 1
+        if self._has_delays is None:
+            self._has_delays = man.get("has_delays")
         if resume and start > 0:
             # the seen set is the fetched table itself, so nothing is rebuilt;
             # a bloom_segments table left by an older engine is never read

@@ -88,16 +88,13 @@ def main() -> None:
     except (TypeError, ValueError) as e:
         ap.error(str(e))
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F  # noqa: N812
 
-    # spark-submit supplies master/conf; fall back to local for bare runs
-    spark = (
-        SparkSession.builder.appName("gocrawler-spark")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    from cs3103_gocrawler_spark.session import build_session
+
+    # the engine's session confs; spark-submit's --master and --conf take
+    # precedence, and a bare run falls back to $SPARK_MASTER or local[*]
+    spark = build_session(app_name="gocrawler-spark")
 
     from cs3103_gocrawler_spark.synthetic.webgen import WebConfig, generate_spark
 

@@ -1,8 +1,12 @@
 """Links are canonicalized once: the fused fetch pass emits canonical links,
-and host/path/url_sha1 are derived from them on the JVM."""
+and host/path/url_sha1 are derived from them on the JVM. Seeds that are
+already canonical pass through on the JVM; only the others cross into the
+canonicalization UDF."""
 
 import pandas as pd
+from conftest import MEDIUM, TINY
 from pyspark.sql import functions as F  # noqa: N812
+from test_plans import _plan
 
 import cs3103_gocrawler_spark.streaming.rounds as rounds
 from cs3103_gocrawler_spark.functions.urlfuncs import (
@@ -10,10 +14,11 @@ from cs3103_gocrawler_spark.functions.urlfuncs import (
     sha1_64,
     split_canonical,
 )
-from cs3103_gocrawler_spark.operators.canonicalize import with_url_columns
+from cs3103_gocrawler_spark.operators.canonicalize import with_canonical, with_url_columns
 from cs3103_gocrawler_spark.operators.extract import make_scoped_extractor
+from cs3103_gocrawler_spark.storage import RoundCatalog
 from cs3103_gocrawler_spark.streaming.rounds import CrawlConfig, CrawlEngine
-from cs3103_gocrawler_spark.synthetic.webgen import WebConfig, generate_pandas
+from cs3103_gocrawler_spark.synthetic.webgen import WebConfig, generate_pandas, seeds_for
 
 EDGE_URLS = [
     "http://h0.test:8080/p/1",
@@ -26,6 +31,85 @@ EDGE_URLS = [
     "http://user:pw@h5.test:81/x",
     "http://h6.test",
 ]
+
+
+# seeds the JVM pass-through must not take for canonical: Java's $ matches
+# before a final line terminator and its \s is ASCII-only, while
+# canonicalize_url strips Unicode whitespace first
+SEED_EDGE_URLS = [
+    "http://h0.test/p/1\n", "http://h0.test/p/1 ", "http://h0.test/p/1\u00a0",
+    " http://h0.test/p/1", "\u00a0http://h0.test/p/1", "\thttp://h0.test/p/1\r\n",
+    "http://h0.test/p/1\u2028", "http://h0.test/p/1\x1c", "http://h0.test/p/1\x85",
+    "http://h0.test/a b", "http://h0.test/a\nb",
+    "http://H1.TEST/p/2", "HTTP://h1.test/p/2", "http://h1.test:80/p/2",
+    "https://h1.test:443/p/2", "http://h1.test:443/p/2", "https://h1.test:80/p/2",
+    "http://h2.test/a/./b", "http://h2.test/a/../b", "http://h2.test/./",
+    "http://h2.test/..", "http://h2.test/.hidden",
+    "http://h3.test/p?q=1", "http://h3.test/p?", "http://h3.test/p#frag",
+    "http://h3.test/p#", "http://h3.test",
+    "http://user:pw@h4.test/p", "http://user@h4.test/p",
+    "mailto:someone@h0.test", "ftp://h0.test/x", "", None,
+    "http://h5.test/%7E/caf\u00e9", "https://h5.test/\u65e5\u672c",
+]
+
+
+def _webgen_seeds():
+    urls = set()
+    for cfg in (TINY, MEDIUM, WebConfig(seed=101, n_hosts=30, n_pages=1500)):
+        urls |= set(seeds_for(cfg)["url"])
+    return sorted(urls)
+
+
+def test_seed_canonicalization_matches_canonicalize_url(spark):
+    """with_canonical (the JVM pass-through plus the UDF) equals
+    canonicalize_url on every webgen seed and on whitespace, case, port,
+    dot-segment, query, fragment, userinfo, non-http, empty and null
+    seeds; unparsable and non-http seeds are dropped."""
+    seeds = _webgen_seeds()
+    urls = seeds + SEED_EDGE_URLS
+    df = spark.createDataFrame(pd.DataFrame({"i": range(len(urls)), "url": urls}))
+    got = {
+        r.i: (r.url, r.host, r.path, r.url_sha1)
+        for r in with_canonical(df).collect()
+    }
+    want = {}
+    for i, u in enumerate(urls):
+        c = canonicalize_url(u) if u is not None else None
+        if c is not None:
+            want[i] = (c, *split_canonical(c), sha1_64(c))
+    assert got == want
+    # the seeds take the pass-through, and the edge cases are not all
+    # canonical: some cross, some are dropped
+    assert all(canonicalize_url(u) == u for u in seeds)
+    assert len(want) < len(urls) and any(
+        want.get(len(seeds) + k, (e,))[0] != e for k, e in enumerate(SEED_EDGE_URLS)
+    )
+
+
+def test_canonical_pandas_seeds_plan_no_python(spark, tiny_web, tmp_path, monkeypatch):
+    """init_frontier of an all-canonical pandas seed set plans no Python
+    stage: the seeds fold to a local relation on the JVM. A non-canonical
+    seed brings the UDF back."""
+    cfg_web, web_dir = tiny_web
+    plans = {}
+    write = RoundCatalog.write
+
+    def recording_write(self, df, kind, round_id):
+        plans[(self.state_dir, kind, round_id)] = _plan(df)
+        return write(self, df, kind, round_id)
+
+    monkeypatch.setattr(RoundCatalog, "write", recording_write)
+    pages = spark.read.parquet(f"{web_dir}/pages.parquet")
+    canonical = seeds_for(cfg_web)
+    messy = canonical.assign(url="HTTP://" + canonical["url"].str.split("://").str[1])
+    for name, pdf in (("canonical", canonical), ("messy", messy)):
+        state = str(tmp_path / name)
+        eng = CrawlEngine(spark, pages, CrawlConfig(max_depth=2), state)
+        eng.init_frontier(spark.createDataFrame(pdf))
+        frontier = eng.cat.read("frontier", 0).toPandas()
+        assert sorted(frontier["url"]) == sorted(canonical["url"])
+        python = "ArrowEvalPython" in plans[(state, "frontier", 0)]
+        assert python == (name == "messy"), plans[(state, "frontier", 0)]
 
 
 def _derived(spark, urls):

@@ -9,6 +9,7 @@ import subprocess
 import sys
 
 import pytest
+from test_session import spark_submit, submit_env
 
 from cs3103_gocrawler_spark.plans.report import write_report
 from cs3103_gocrawler_spark.streaming.rounds import PHASE_KEYS, CrawlConfig, CrawlEngine
@@ -17,17 +18,36 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DRIVER = os.path.join(REPO, "scripts", "crawl_driver.py")
 
 
-def _run_cli(web_dir, state_dir, report_path, extra):
-    p = subprocess.run(
-        [sys.executable, DRIVER, "--web-dir", web_dir, "--state-dir", state_dir,
-         "--report", report_path, *extra],
-        capture_output=True, text=True, timeout=420,
-        env={**os.environ, "PYSPARK_PYTHON": sys.executable},
-    )
+def _json_line(p):
     assert p.returncode == 0, p.stderr[-2000:]
     out = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
     assert out, p.stdout
     return json.loads(out[-1])
+
+
+def _run_cli(web_dir, state_dir, report_path, extra):
+    # a bare run builds its session with build_session's defaults; the
+    # driver memory stays small here, as spark-submit's own default would
+    return _json_line(subprocess.run(
+        [sys.executable, DRIVER, "--web-dir", web_dir, "--state-dir", state_dir,
+         "--report", report_path, *extra],
+        capture_output=True, text=True, timeout=420,
+        env={**os.environ, "PYSPARK_PYTHON": sys.executable, "SPARK_DRIVER_MEM": "1g"},
+    ))
+
+
+def test_cli_under_spark_submit_keeps_master(tiny_web, tmp_path):
+    """Under spark-submit the driver builds the engine's session, and the
+    submitted --master decides the parallelism it reports."""
+    _, web_dir = tiny_web
+    summary = _json_line(subprocess.run(
+        [spark_submit(), "--master", "local[2]", "--driver-memory", "1g", DRIVER,
+         "--web-dir", web_dir, "--state-dir", str(tmp_path / "state"),
+         "--max-depth", "2", "--budget-per-host", "3"],
+        capture_output=True, text=True, timeout=420, env=submit_env(),
+    ))
+    assert summary["parallelism"] == 2
+    assert summary["urls_dequeued"] > 0
 
 
 def _engine_report(spark, web_dir, tmp_path, cfg, name):

@@ -1,4 +1,5 @@
-"""Frontier r+1 is one anti-join: (pending ∪ gated children) minus seen(≤ r).
+"""Frontier r+1 is one anti-join: the robots-gated merge of pending ∪ children,
+minus seen(≤ r).
 
 The deferred rows of round r are the pending rows the anti-join keeps, so
 the frontier write never re-runs the dequeue's rank windows, and whether it
@@ -12,7 +13,7 @@ import pytest
 from pyspark.sql import Observation
 from test_crawl_delay import _robots_pdf
 from test_oracle_conformance import compare, oracle_run, run_engine
-from test_plans import _plan, assert_topk_once
+from test_plans import _NODE_RE, _plan, assert_topk_once
 from test_resume import _state_fingerprint
 
 from cs3103_gocrawler_spark.storage import RoundCatalog
@@ -56,14 +57,15 @@ def _metrics(eng):
 
 def _recorded_crawl(spark, tiny_web, state_dir, cfg):
     """Run a crawl with tiny_web's robots delay cap, recording the optimized
-    plan of every frontier r+1 written through Spark and the executed plan
-    of every fetched write."""
-    frontier_plans, fetched_plans = {}, {}
+    and the executed plan of every frontier r+1 written through Spark and
+    the executed plan of every fetched write."""
+    frontier_plans, frontier_exec, fetched_plans = {}, {}, {}
     write = RoundCatalog.write
 
     def recording_write(self, df, kind, round_id):
         if kind == "frontier" and round_id > 0:
             frontier_plans[round_id] = _plan_nodes(df)
+            frontier_exec[round_id] = _plan(df)
         if kind == "fetched":
             fetched_plans[round_id] = _plan(df)
         return write(self, df, kind, round_id)
@@ -76,7 +78,7 @@ def _recorded_crawl(spark, tiny_web, state_dir, cfg):
         history = eng.run()
     finally:
         mp.undo()
-    return eng, history, frontier_plans, fetched_plans
+    return eng, history, frontier_plans, fetched_plans, frontier_exec
 
 
 @pytest.fixture(scope="module")
@@ -88,7 +90,7 @@ def polite_crawl(spark, tiny_web, tmp_path_factory):
 
 
 def test_frontier_never_reranks(polite_crawl):
-    _, history, plans, _ = polite_crawl
+    _, history, plans, _, _ = polite_crawl
     assert sum(h.get("deferred", 0) for h in history) > 0, "nothing was deferred"
     assert len(plans) >= 3
     for r, nodes in plans.items():
@@ -98,6 +100,62 @@ def test_frontier_never_reranks(polite_crawl):
         assert len(anti) == 1, (r, names)
 
 
+def _subtree(nodes, i):
+    """Indices of node ``i`` and its descendants in a list of (depth, text)
+    plan nodes."""
+    j = i + 1
+    while j < len(nodes) and nodes[j][0] > nodes[i][0]:
+        j += 1
+    return range(i, j)
+
+
+def test_robots_gate_above_min_merge(polite_crawl):
+    """The robots gate joins the merged rows: in every frontier r+1 written
+    through Spark with children in it, the robots broadcast join sits above
+    the min-merge's final aggregate, and nothing below the merge's exchange
+    joins, so the merge's shuffle map stage waits for no broadcast. A
+    frontier of deferred rows alone (they passed the gate already) has no
+    gate. Every frontier keeps the table's column order."""
+    eng, _, _, _, plans = polite_crawl
+    for r in range(max(plans) + 1):
+        assert eng.cat.read("frontier", r).columns == [
+            "url", "host", "path", "url_sha1", "depth", "parent", "priority"
+        ], r
+    rules = eng.robots.toPandas()
+    assert any("/missing/" in p for p in rules["disallow_prefixes"])
+    assert (rules["crawl_delay_ms"] > 0).any()
+    spawned = {r: p for r, p in plans.items() if "Generate explode(links" in p}
+    assert len(spawned) >= 3
+    for r, plan in plans.items():
+        nodes = [
+            (m.start(1), line[m.start(1):])
+            for line in plan.splitlines() if (m := _NODE_RE.match(line))
+        ]
+        gate = [
+            i for i, (_, t) in enumerate(nodes)
+            if t.startswith("BroadcastHashJoin [host") and "LeftOuter" in t
+        ]
+        if r not in spawned:
+            assert gate == [], (r, plan)
+            continue
+        # the final (not partial) aggregate of the min-merge; it may plan
+        # as a Hash- or SortAggregate
+        merge = [
+            i for i, (_, t) in enumerate(nodes)
+            if "Aggregate(key" in t.split("[")[0] and "min(struct(depth" in t
+            and "partial_" not in t
+        ]
+        assert len(gate) == 1 and len(merge) == 1, (r, plan)
+        assert merge[0] in _subtree(nodes, gate[0]), (r, plan)
+        exchange = [
+            i for i in _subtree(nodes, merge[0])
+            if nodes[i][1].startswith("Exchange hashpartitioning(url")
+        ]
+        assert len(exchange) == 1, (r, plan)
+        below = [nodes[i][1] for i in _subtree(nodes, exchange[0])]
+        assert not [t for t in below if "Join" in t.split(" ")[0]], (r, plan)
+
+
 @pytest.mark.parametrize("carryover", [False, True], ids=["budget_caps", "carryover_caps"])
 def test_fetched_write_ranks_once(spark, tiny_web, tmp_path, polite_crawl, carryover):
     """Every round's dequeue inside the fetched write is one host window
@@ -105,10 +163,12 @@ def test_fetched_write_ranks_once(spark, tiny_web, tmp_path, polite_crawl, carry
     only host exchange, with a flat budget or carryover takes, both bounded
     by a robots delay cap."""
     if carryover:
-        _, history, _, fetched = polite_crawl
+        _, history, _, fetched, _ = polite_crawl
     else:
         cfg = CrawlConfig(max_depth=5, budget_per_host=2)
-        _, history, _, fetched = _recorded_crawl(spark, tiny_web, str(tmp_path / "s"), cfg)
+        _, history, _, fetched, _ = _recorded_crawl(
+            spark, tiny_web, str(tmp_path / "s"), cfg
+        )
     assert sum(h.get("deferred", 0) for h in history) > 0, "nothing was deferred"
     assert len(fetched) >= 3
     for plan in fetched.values():
@@ -170,7 +230,7 @@ def test_frontier_does_not_trust_observed_counts(spark, tiny_web, tmp_path, monk
 def test_crash_at_frontier_write_resumes(spark, tiny_web, tmp_path, monkeypatch, polite_crawl):
     """A crash at the frontier write of round 2, after fetched_2 and
     host_state_3 exist, resumes to the uninterrupted crawl."""
-    full, _, _, _ = polite_crawl
+    full, _, _, _, _ = polite_crawl
     write = RoundCatalog.write
 
     def crashing_write(self, df, kind, round_id):
