@@ -17,8 +17,8 @@ operators/   the crawl's Spark operators: canonicalize (U1), seen-set
              extraction (U3/X1), fused fetch (J4/U2), matchers (P1-P6),
              payload validation (U4/X5), robots (live mode), the X4
              table scrape of the reference's tianalyser, and the
-             training-data pipeline ops (dedup / similarity / textstats /
-             multimodal / temporal) behind the query registry
+             training-data pipeline ops (dedup / textstats / temporal)
+             behind the query registry
 functions/   scalar helpers: URL column functions, retry backoff policies
 plans/       report/aggregate queries (A3-A7) and the operator query
              registry with DuckDB twins (``generic_queries.QUERIES``)

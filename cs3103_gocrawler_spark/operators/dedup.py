@@ -3,7 +3,7 @@
 Exact (hash-groupBy), MinHash+LSH (shingle→minhash→band→bucket-join),
 SimHash, and n-gram Jaccard — each as a pure DataFrame transform with a
 matching ANSI-SQL twin (plans/generic_queries.py) so DuckDB can oracle-check
-it. Embedding-cosine near-dup lives in similarity.py.
+it.
 
 Cross-engine hash parity: both Spark and DuckDB compute
 ``md5`` identically, so the shared 60-bit hash is

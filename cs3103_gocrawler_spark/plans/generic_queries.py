@@ -13,10 +13,10 @@ Cross-engine parity rules used throughout:
   DuckDB's BIGINT.
 * the shared 60-bit hash is the md5-prefix trick (operators/dedup.py).
 
-Every entry — including the pandas-UDF pipelines (lang_id, scrape,
-multimodal) and the LSH paths — carries a full SQL twin: deterministic
-UDF outputs are *reconstructed* in SQL (md5/sha256 + arithmetic, hyperplane
-sign literals), so the driver's hash gate covers the whole registry.
+Every entry — including the pandas-UDF pipelines (lang_id, scrape) and
+the MinHash LSH path — carries a full SQL twin: deterministic UDF outputs
+are *reconstructed* in SQL (md5/sha256 + arithmetic), so the driver's hash
+gate covers the whole registry.
 """
 
 from __future__ import annotations
@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..operators import dedup, similarity, temporal, textstats
-from ..operators.multimodal import extract_features
+from ..operators import dedup, temporal, textstats
 
 STOP_SQL = "['" + "','".join(textstats.STOPWORDS) + "']"
 
@@ -1269,46 +1268,8 @@ FROM grams GROUP BY doc_id
 """.format(h=_HASH_SQL.format(x="gram"))
 
 # --------------------------------------------------------------------------
-# training-data pipeline — similarity search
+# training-data pipeline — image near-dup
 # --------------------------------------------------------------------------
-
-def q_cosine_topk(spark, sf_dir):
-    return similarity.cosine_topk(_t(spark, sf_dir, "embeddings"), k=5, query_mod=50)
-
-
-SQL_COSINE_TOPK = """
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS a
-           FROM embeddings WHERE vec_id % 50 = 0),
-n AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS b FROM embeddings),
-p AS (SELECT query_id, neighbor_id,
-             round(list_sum(list_transform(range(1, len(a) + 1), i -> a[i] * b[i]))
-                   / (sqrt(list_sum(list_transform(a, x -> x * x)))
-                      * sqrt(list_sum(list_transform(b, x -> x * x)))), 6) AS cosine
-      FROM q, n WHERE query_id <> neighbor_id)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-  FROM p)
-WHERE rank <= 5
-"""
-
-
-def q_embedding_neardup(spark, sf_dir):
-    return similarity.embedding_neardup_pairs(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3
-    )
-
-
-SQL_EMBEDDING_NEARDUP = """
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-SELECT id_a, id_b, cosine FROM (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         round(list_sum(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]))
-               / (sqrt(list_sum(list_transform(a.e, x -> x * x)))
-                  * sqrt(list_sum(list_transform(b.e, x -> x * x)))), 6) AS cosine
-  FROM v a JOIN v b ON a.vec_id < b.vec_id)
-WHERE cosine >= 0.3
-"""
 
 # two deterministic rows per document: the base 60-bit hash as a pseudo-phash
 # and a variant XOR'd with a 3-bit mask (near-dup) or an 8-bit mask (far) —
@@ -1407,14 +1368,6 @@ SELECT u AS image_id, min(label) AS component FROM reach GROUP BY u
 """
 
 
-def q_embedding_neardup_lsh(spark, sf_dir):
-    """The scale path for embedding near-dup: LSH-bucketed candidates, exact
-    cosine verify — shuffle key is the bucket, never a cross join."""
-    return similarity.embedding_neardup_lsh(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3
-    )
-
-
 # --------------------------------------------------------------------------
 # pandas-UDF pipelines with reconstructed SQL twins
 #
@@ -1467,142 +1420,6 @@ FROM sc
 )
 
 
-_LSH_PROBE_BITS = 3  # recall 1.0 vs exact top-5 on the sf embeddings
-
-
-def q_similarity_lsh_bucketed(spark, sf_dir):
-    return similarity.bucketed_cosine_topk(
-        _t(spark, sf_dir, "embeddings"), k=5, query_mod=50,
-        probe_bits=_LSH_PROBE_BITS,
-    )
-
-
-def _lsh_bucket_sql(table: int, n_planes: int = 6, dim: int = 64) -> str:
-    """Reconstruct hyperplane_lsh_buckets for one LSH table: the hyperplane
-    signs are deterministic driver-side constants (similarity._plane_sign_py),
-    embedded as ±1 literals; the projection is an explicit left-associated
-    chain so float accumulation order matches Spark's F.aggregate fold."""
-    bits = []
-    for b in range(n_planes):
-        chain = "0.0"
-        for d in range(dim):
-            s = similarity._plane_sign_py(b, d, table)
-            chain = f"({chain} + e[{d + 1}] * {s:.1f})"
-        bits.append(f"(CASE WHEN {chain} > 0 THEN {1 << b} ELSE 0 END)")
-    return " + ".join(bits)
-
-
-_LSH_N_TABLES = 3
-
-def _lsh_bucket_ctes() -> str:
-    return ",\n".join(
-        f"bt{t} AS (SELECT vec_id, {_lsh_bucket_sql(t)} AS bucket FROM v)"
-        for t in range(_LSH_N_TABLES)
-    )
-
-
-SQL_EMBEDDING_NEARDUP_LSH = """
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-{bucket_ctes},
-cand AS (
-  SELECT DISTINCT id_a, id_b FROM (
-    {cand_unions})),
-p AS (
-  SELECT c.id_a, c.id_b,
-         round(list_sum(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]))
-               / (sqrt(list_sum(list_transform(a.e, x -> x * x)))
-                  * sqrt(list_sum(list_transform(b.e, x -> x * x)))), 6) AS cosine
-  FROM cand c JOIN v a ON a.vec_id = c.id_a JOIN v b ON b.vec_id = c.id_b)
-SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.3
-""".format(
-    bucket_ctes=_lsh_bucket_ctes(),
-    cand_unions="\n    UNION ALL ".join(
-        f"SELECT l.vec_id AS id_a, r.vec_id AS id_b "
-        f"FROM bt{t} l JOIN bt{t} r ON l.bucket = r.bucket AND l.vec_id < r.vec_id"
-        for t in range(_LSH_N_TABLES)
-    ),
-)
-
-SQL_SIMILARITY_LSH_BUCKETED = """
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-{bucket_ctes},
-cand AS (
-  SELECT DISTINCT query_id, neighbor_id FROM (
-    {cand_unions})),
-p AS (
-  SELECT c.query_id, c.neighbor_id,
-         round(list_sum(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]))
-               / (sqrt(list_sum(list_transform(a.e, x -> x * x)))
-                  * sqrt(list_sum(list_transform(b.e, x -> x * x)))), 6) AS cosine
-  FROM cand c JOIN v a ON a.vec_id = c.query_id JOIN v b ON b.vec_id = c.neighbor_id)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM p)
-WHERE rank <= 5
-""".format(
-    bucket_ctes=_lsh_bucket_ctes(),
-    # multi-probe: the query side probes every bucket within Hamming distance
-    # _LSH_PROBE_BITS of its signature (similarity.bucketed_cosine_topk)
-    cand_unions="\n    UNION ALL ".join(
-        f"SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id "
-        f"FROM (SELECT b.vec_id, xor(b.bucket, pm.mask) AS bucket FROM bt{t} b, "
-        f"(SELECT unnest({similarity.probe_masks(6, _LSH_PROBE_BITS)}) AS mask) pm "
-        f"WHERE b.vec_id % 50 = 0) q "
-        f"JOIN bt{t} n ON q.bucket = n.bucket AND q.vec_id <> n.vec_id"
-        for t in range(_LSH_N_TABLES)
-    ),
-)
-
-
-_IVF_CENTROIDS = 8
-_IVF_NPROBE = 2
-
-
-def q_similarity_ivf(spark, sf_dir):
-    """IVF ANN (inverted-file variant of the scale path): coarse-quantize to
-    the max-cosine centroid, probe the nprobe nearest inverted lists."""
-    return similarity.ivf_topk(
-        _t(spark, sf_dir, "embeddings"), k=5, query_mod=50,
-        n_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE,
-    )
-
-
-# the twin recomputes the deterministic "training" (lowest-id centroids) and
-# the UNROUNDED assignment cosines; both engines evaluate the identical
-# float64 expression tree, so argmax/row_number agree bit-for-bit
-SQL_SIMILARITY_IVF = f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-cent AS (SELECT vec_id AS cid, e AS ce FROM v
-         WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT {_IVF_CENTROIDS})),
-cc AS (SELECT v.vec_id, cent.cid,
-              list_sum(list_transform(range(1, len(v.e) + 1), i -> v.e[i] * cent.ce[i]))
-              / (sqrt(list_sum(list_transform(v.e, x -> x * x)))
-                 * sqrt(list_sum(list_transform(cent.ce, x -> x * x)))) AS c
-       FROM v, cent),
-asn AS (SELECT vec_id AS neighbor_id, cid FROM (
-          SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cid) AS rn
-          FROM cc)
-        WHERE rn = 1),
-probe AS (SELECT vec_id AS query_id, cid FROM (
-          SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cid) AS rn
-          FROM cc WHERE vec_id % 50 = 0)
-        WHERE rn <= {_IVF_NPROBE}),
-cand AS (SELECT DISTINCT p.query_id, a.neighbor_id
-         FROM probe p JOIN asn a ON a.cid = p.cid AND a.neighbor_id <> p.query_id),
-p AS (SELECT c.query_id, c.neighbor_id,
-             round(list_sum(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]))
-                   / (sqrt(list_sum(list_transform(a.e, x -> x * x)))
-                      * sqrt(list_sum(list_transform(b.e, x -> x * x)))), 6) AS cosine
-      FROM cand c JOIN v a ON a.vec_id = c.query_id JOIN v b ON b.vec_id = c.neighbor_id)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM p)
-WHERE rank <= 5
-"""
-
-
 def q_scrape_tables(spark, sf_dir):
     """X4 — tianalyser's HTML-table scrape
     (example/tianalyser/internal/tianalyser/tianalyser.go:80-118) as a
@@ -1645,101 +1462,9 @@ FROM documents WHERE doc_id % 100 = 0
 """
 
 
-def q_multimodal_extract(spark, sf_dir):
-    """Multimodal plumbing over sf_dir: documents' text bytes as the opaque
-    binary payload (modality 'stub'), batch feature extraction. The raw
-    ``feature`` array is reduced to a left-fold checksum for the registry so
-    the driver can hash it (and the DuckDB twin can recompute it)."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.lit("stub").alias("modality"),
-    )
-    feats = extract_features(docs, "doc_id", "payload", "modality")
-    return feats.select(
-        "id", "modality", "n_bytes", "decode_ok",
-        F.round(
-            F.aggregate("feature", F.lit(0.0), lambda acc, x: acc + x.cast("double")),
-            6,
-        ).alias("feature_sum"),
-    )
-
-
-def _mm_u32_sql(i: int) -> str:
-    """uint32 #i (little-endian) of the sha256 digest repeated to 64 bytes —
-    multimodal._stub_decode's frombuffer reconstructed from the hex string."""
-    parts = []
-    for j in range(4):
-        pos = (4 * (i % 8) + j) * 2 + 1
-        parts.append(f"CAST('0x' || substr(h, {pos}, 2) AS BIGINT) * {256 ** j}")
-    return "(" + " + ".join(parts) + ")"
-
-
-def _mm_checksum_sql() -> str:
-    # left-associated chain matching F.aggregate's fold order; each element is
-    # (u32 / 2^32) rounded through float32 exactly as numpy's astype(float32)
-    chain = "0.0"
-    for i in range(16):
-        term = f"CAST(CAST({_mm_u32_sql(i)} / 4294967296.0 AS FLOAT) AS DOUBLE)"
-        chain = f"({chain} + {term})"
-    return chain
-
-
-SQL_MULTIMODAL_EXTRACT = f"""
-WITH b AS (SELECT CAST(doc_id AS VARCHAR) AS id, 'stub' AS modality,
-                  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                  sha256(text) AS h
-           FROM documents)
-SELECT id, modality, n_bytes, true AS decode_ok,
-       round({_mm_checksum_sql()}, 6) AS feature_sum
-FROM b
-"""
-
-
 # --------------------------------------------------------------------------
-# T35–T36 — semantic dedup, image curation
+# T36 — image curation
 # --------------------------------------------------------------------------
-
-# SemDeDup ball radius for THIS synthetic embedding table: the vectors are
-# near-orthogonal (within-cluster cosine p99 ≈ 0.32, max ≈ 0.49 at sf0.01),
-# so 0.35 plays the role the paper's ~0.95 plays on real text embeddings —
-# drops a meaningful minority without collapsing the corpus
-_SEMDEDUP_TAU = 0.35
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """T35 — SemDeDup: IVF-cluster the embeddings, drop in-cluster points
-    with a smaller-id near-twin (cosine >= tau); every row labeled kept."""
-    return similarity.semantic_dedup(
-        _t(spark, sf_dir, "embeddings"), threshold=_SEMDEDUP_TAU,
-        n_centroids=_IVF_CENTROIDS,
-    )
-
-
-SQL_SEMANTIC_DEDUP = f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-cent AS (SELECT vec_id AS cid, e AS ce FROM v
-         WHERE vec_id IN (SELECT vec_id FROM v ORDER BY vec_id LIMIT {_IVF_CENTROIDS})),
-cc AS (SELECT v.vec_id, cent.cid,
-              list_sum(list_transform(range(1, len(v.e) + 1), i -> v.e[i] * cent.ce[i]))
-              / (sqrt(list_sum(list_transform(v.e, x -> x * x)))
-                 * sqrt(list_sum(list_transform(cent.ce, x -> x * x)))) AS c
-       FROM v, cent),
-asn AS (SELECT vec_id, cid FROM (
-          SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, cid) AS rn
-          FROM cc)
-        WHERE rn = 1),
-p AS (SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-             round(list_sum(list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i]))
-                   / (sqrt(list_sum(list_transform(a.e, x -> x * x)))
-                      * sqrt(list_sum(list_transform(b.e, x -> x * x)))), 6) AS cosine
-      FROM asn x JOIN asn y ON x.cid = y.cid AND x.vec_id < y.vec_id
-      JOIN v a ON a.vec_id = x.vec_id JOIN v b ON b.vec_id = y.vec_id),
-drops AS (SELECT DISTINCT id_b FROM p WHERE cosine >= {_SEMDEDUP_TAU})
-SELECT asn.vec_id, asn.cid, (drops.id_b IS NULL) AS kept
-FROM asn LEFT JOIN drops ON asn.vec_id = drops.id_b
-"""
-
 
 def q_image_curation(spark, sf_dir):
     """T36 — LAION-style image-corpus curation gate over the constructed
@@ -1747,8 +1472,8 @@ def q_image_curation(spark, sf_dir):
     q_phash_neardup, plus deterministic metadata): keep an image iff
     min-dim >= 200, aspect within [1/3, 3] (integer cross-multiplied),
     fmt is not an animation container, caption has >= 5 words, and it has
-    no SMALLER-id phash near-twin (hamming <= 3, pairwise greedy — the
-    image-axis analog of the T35 keep rule).
+    no SMALLER-id phash near-twin (hamming <= 3, pairwise greedy: a row
+    goes iff some smaller id sits within the radius).
 
     Scale shape: metadata gates are row-local JVM predicates evaluated
     before the banded join (the only shuffle); the drop list re-joins under
@@ -1866,18 +1591,11 @@ QUERIES = {
     "pii_redact": (q_pii_redact, SQL_PII_REDACT),
     "stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
     "contamination_check": (q_contamination_check, SQL_CONTAMINATION_CHECK),
-    "cosine_topk": (q_cosine_topk, SQL_COSINE_TOPK),
-    "embedding_neardup": (q_embedding_neardup, SQL_EMBEDDING_NEARDUP),
-    "embedding_neardup_lsh": (q_embedding_neardup_lsh, SQL_EMBEDDING_NEARDUP_LSH),
     "phash_neardup": (q_phash_neardup, SQL_PHASH_NEARDUP),
     "phash_neardup_components": (
         q_phash_neardup_components, SQL_PHASH_NEARDUP_COMPONENTS,
     ),
-    "similarity_ivf": (q_similarity_ivf, SQL_SIMILARITY_IVF),
-    "semantic_dedup": (q_semantic_dedup, SQL_SEMANTIC_DEDUP),
     "image_curation": (q_image_curation, SQL_IMAGE_CURATION),
     "scrape_tables": (q_scrape_tables, SQL_SCRAPE_TABLES),
     "lang_id": (q_lang_id, SQL_LANG_ID),
-    "similarity_lsh_bucketed": (q_similarity_lsh_bucketed, SQL_SIMILARITY_LSH_BUCKETED),
-    "multimodal_extract": (q_multimodal_extract, SQL_MULTIMODAL_EXTRACT),
 }

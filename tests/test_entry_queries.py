@@ -11,10 +11,11 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from cs3103_gocrawler_spark.plans.generic_queries import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_CORRECTNESS", "/root/testdata/sf0.01")
 TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
+    "region nation customer supplier part orders lineitem events documents"
 ).split()
 
 
@@ -67,6 +68,13 @@ def test_query_matches_oracle(spark, ddb, name):
         f"{name}: {len(mism)} mismatched rows; first: "
         f"spark={s_rows[mism[0]]} duck={d_rows[mism[0]]}"
     )
+
+
+def test_registry_fits_recorder_cap():
+    """The correctness recorder keeps at most 50 rows: the whole registry
+    fits under it, in ``QUERIES`` order with no rotation."""
+    assert len(entry_mod.queries()) <= 50
+    assert list(entry_mod.queries()) == list(QUERIES)
 
 
 def test_entry_smoke(spark):

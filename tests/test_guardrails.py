@@ -84,3 +84,25 @@ def test_finalize_clears_stale_parts(spark, tmp_path):
     eng._finalize()
     got = spark.read.parquet(out).collect()
     assert len(got) == 1 and got[0]["round_id"] == 0
+
+
+def test_crawl_path_imports_no_registry_module():
+    """The engine's import closure holds none of the query registry's
+    modules, so they can change or go without touching the crawl path."""
+    import subprocess
+    import sys
+
+    pkg = "cs3103_gocrawler_spark"
+    engine = ["streaming.rounds", "plans.report", "session", "storage"]
+    registry = ["plans.generic_queries", "operators.dedup", "operators.textstats",
+                "operators.temporal", "operators.scrape"]
+    code = (
+        "import importlib, sys\n"
+        f"for m in {engine!r}: importlib.import_module('{pkg}.' + m)\n"
+        f"print(sorted(m for m in {registry!r} if '{pkg}.' + m in sys.modules))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    p = subprocess.run([sys.executable, "-c", code], cwd=root,
+                       capture_output=True, text=True, timeout=120)
+    assert p.returncode == 0, p.stderr
+    assert p.stdout.strip() == "[]", p.stdout

@@ -1,5 +1,5 @@
 """Operator-level unit tests: politeness exactness, bloom behavior, the
-seen-set build's job count, similarity recall, multimodal plumbing, and
+seen-set build's job count, the dedup / textstats / temporal ops, and
 physical-plan sanity (pushdown / broadcast — the §4.2 scale discipline)."""
 
 import numpy as np
@@ -14,7 +14,6 @@ from cs3103_gocrawler_spark.operators.seen import (
     build_bloom_distributed,
     build_round_state,
 )
-from cs3103_gocrawler_spark.operators.similarity import bucketed_cosine_topk, cosine_topk
 from cs3103_gocrawler_spark.storage import RoundCatalog
 
 
@@ -154,98 +153,6 @@ def test_broadcast_resume_build_counts_rows_without_count_job(spark, monkeypatch
     assert len(jobs) == len(build_jobs), (jobs, build_jobs)
 
 
-def _emb_df(spark, n=120, dim=16, seed=0):
-    rng = np.random.default_rng(seed)
-    base = rng.normal(size=(6, dim))
-    rows = []
-    for i in range(n):
-        v = base[i % 6] + rng.normal(scale=0.3, size=dim)
-        rows.append({"vec_id": i, "embedding": [float(x) for x in v]})
-    return spark.createDataFrame(pd.DataFrame(rows))
-
-
-def test_cosine_topk_exact_vs_numpy(spark):
-    emb = _emb_df(spark)
-    got = cosine_topk(emb, k=3, query_mod=40).toPandas()
-    pdf = emb.toPandas().sort_values("vec_id")
-    mat = np.stack(pdf["embedding"].map(np.asarray))
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    for q in [0, 40, 80]:
-        sims = mat @ mat[q]
-        sims[q] = -np.inf
-        order = np.lexsort((np.arange(len(sims)), -np.round(sims, 6)))
-        want = list(order[:3])
-        rows = got[got.query_id == q].sort_values("rank")
-        assert list(rows["neighbor_id"]) == want, f"query {q}"
-
-
-def test_lsh_bucketed_recall(spark):
-    """Clustered vectors: bucketed ANN should recover most exact neighbors."""
-    emb = _emb_df(spark, n=150)
-    exact = cosine_topk(emb, k=3, query_mod=50).toPandas()
-    approx = bucketed_cosine_topk(emb, k=3, query_mod=50, n_planes=4).toPandas()
-    e = {(r.query_id, r.neighbor_id) for r in exact.itertuples()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.itertuples()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.5, f"recall {recall}"
-
-
-def test_lsh_bucketed_recall_gate_sf_embeddings(spark):
-    """The scale-path recall gate (registry parameters) on the real sf0.001
-    embeddings: bucketed ANN must recover ≥0.9 of the exact top-k."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = cosine_topk(emb, k=5, query_mod=50).toPandas()
-    approx = bucketed_cosine_topk(
-        emb, k=5, query_mod=50, n_planes=6, n_tables=3, probe_bits=3
-    ).toPandas()
-    e = {(r.query_id, r.neighbor_id) for r in exact.itertuples()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.itertuples()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.9, f"recall {recall}"
-
-
-def test_embedding_neardup_lsh_subset_of_exact(spark):
-    """LSH near-dup pairs ⊆ exact pairs (no false positives — the cosine
-    verify is exact), with decent recall on clustered data."""
-    from cs3103_gocrawler_spark.operators.similarity import (
-        embedding_neardup_lsh,
-        embedding_neardup_pairs,
-    )
-
-    emb = _emb_df(spark, n=120)
-    exact = embedding_neardup_pairs(emb, threshold=0.9).toPandas()
-    lsh = embedding_neardup_lsh(emb, threshold=0.9).toPandas()
-    e = {(r.id_a, r.id_b) for r in exact.itertuples()}
-    a = {(r.id_a, r.id_b) for r in lsh.itertuples()}
-    assert a <= e
-    assert len(e) == 0 or len(a) / len(e) >= 0.5
-
-
-def test_embedding_neardup_pairs_size_guard(spark):
-    """The exact O(n²) baseline self-enforces its verify-scale scoping: past
-    max_rows it raises and points at the LSH scale path."""
-    import pytest as _pytest
-
-    from cs3103_gocrawler_spark.operators.similarity import embedding_neardup_pairs
-
-    emb = _emb_df(spark, n=120)
-    with _pytest.raises(ValueError, match="embedding_neardup_lsh"):
-        embedding_neardup_pairs(emb, max_rows=100)
-    # under the cap it still runs
-    assert embedding_neardup_pairs(emb, max_rows=200).count() >= 0
-
-
-def test_cosine_topk_broadcasts_query_side_only(spark):
-    """Scale guard: the full neighbor set must never be the broadcast side —
-    only the (1/query_mod) query subset."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = cosine_topk(emb, k=5, query_mod=50)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan
-    # the broadcast exchange subtree must contain the query_mod filter
-    bx = plan.split("BroadcastExchange")[1]
-    assert "% 50" in bx or "pmod" in bx, plan
-
-
 def test_lsh_bucket_size_cap_drops_giant_buckets(spark):
     """max_bucket_size: a pathological near-dup cluster must not produce a
     quadratic bucket join — capped buckets are dropped entirely."""
@@ -261,38 +168,6 @@ def test_lsh_bucket_size_cap_drops_giant_buckets(spark):
     assert uncapped >= 30 * 29 / 2  # the giant cluster is quadratic
     assert capped < uncapped
     assert capped == 0  # every bucket of the 30-clone cluster exceeds the cap
-
-
-def test_hyperplane_lsh_rejects_overwide_vectors(spark):
-    import pytest as _pytest
-
-    from cs3103_gocrawler_spark.operators.similarity import hyperplane_lsh_buckets
-
-    wide = spark.createDataFrame(
-        pd.DataFrame({"vec_id": [1], "embedding": [[0.1] * 80]})
-    )
-    with _pytest.raises(Exception, match="dims|raise_error|USER_RAISED"):
-        hyperplane_lsh_buckets(wide).collect()
-
-
-def test_multimodal_extract_real_and_stub(spark, tiny_web):
-    from cs3103_gocrawler_spark.operators.multimodal import extract_features, resize_images
-    from cs3103_gocrawler_spark.synthetic.imagecodec import decode_png
-
-    cfg_web, web_dir = tiny_web
-    pages = spark.read.parquet(f"{web_dir}/pages.parquet").limit(20)
-    feats = extract_features(pages, "image_id", "bytes", "fmt").toPandas()
-    assert feats["decode_ok"].all()
-    assert feats["feature"].map(len).eq(16).all()
-    # stub modality path
-    stub = pages.withColumn("fmt", F.lit("audio"))
-    sfeats = extract_features(stub, "image_id", "bytes", "fmt").toPandas()
-    assert sfeats["decode_ok"].all()
-    # resize produces decodable 8x8 PNGs
-    small = resize_images(pages, "image_id", "bytes", "fmt").toPandas()
-    assert len(small) == 20
-    px = decode_png(bytes(small["out_bytes"].iloc[0]))
-    assert px.shape == (8, 8, 3)
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -365,41 +240,6 @@ def test_lang_id_cjk_and_profiles():
     assert lang_id_py("the thing and the other thing of note") == "en"
     assert lang_id_py("la casa de la madre y el padre de ellos") == "es"
     assert lang_id_py("") == "en"  # empty → initial best
-
-
-def test_sample_frames_plumbing(spark):
-    """Video frame-sample stub: deterministic fan-out, payload stays in the
-    worker (output rows carry only sampled frames)."""
-    from cs3103_gocrawler_spark.operators.multimodal import sample_frames
-
-    rows = [
-        {"vid": "a", "payload": bytes(range(256)) * 640},   # 40 frames of 4096
-        {"vid": "b", "payload": b"x" * 100},                # sub-frame payload
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    got = sample_frames(df, "vid", "payload").toPandas()
-    a = got[got.id == "a"].sort_values("frame_idx")
-    assert list(a["frame_idx"]) == [0, 10, 20, 30]
-    assert (a["n_frames"] == 40).all()
-    assert all(len(b) == 4096 for b in a["frame_bytes"])
-    b = got[got.id == "b"]
-    assert list(b["frame_idx"]) == [0] and int(b["n_frames"].iloc[0]) == 1
-
-
-def test_ivf_topk_recall_and_shape(spark):
-    """IVF ANN: decent recall on clustered vectors; candidates come from
-    inverted-list joins (no cross join of the corpus)."""
-    from cs3103_gocrawler_spark.operators.similarity import ivf_topk
-
-    emb = _emb_df(spark, n=150)
-    exact = cosine_topk(emb, k=3, query_mod=50).toPandas()
-    approx_df = ivf_topk(emb, k=3, query_mod=50, n_centroids=6, nprobe=2)
-    approx = approx_df.toPandas()
-    e = {(r.query_id, r.neighbor_id) for r in exact.itertuples()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.itertuples()}
-    assert len(e & a) / len(e) >= 0.5
-    plan = approx_df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
 
 
 def test_repetition_stats_semantics(spark):
@@ -695,47 +535,6 @@ def test_host_skew_stats_exact_percentiles(spark, tmp_path):
     assert abs(got.avg_cnt - 5.5) < 1e-9
     assert (got.p50_cnt, got.p90_cnt, got.p99_cnt) == (5, 9, 10)
     assert abs(got.skew_ratio - round(100 / 55, 6)) < 1e-9
-
-
-def test_semantic_dedup_pairwise_keep_rule(spark):
-    """T35: within a cluster, a vector is dropped iff a SMALLER-id vector
-    sits within the cosine ball; cross-cluster twins are not compared."""
-    from cs3103_gocrawler_spark.operators import similarity
-
-    # ids 0 and 1 are the two centroids (lowest-id training rule).
-    # 10/11 join cluster 0 as near-copies of centroid 0 -> both dropped
-    # (centroid 0 itself kept); 20 joins cluster 1 as a near-copy of
-    # centroid 1 -> dropped; 30 is in cluster 0 but orthogonal-ish -> kept.
-    rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.0, 1.0, 0.0]),
-        (10, [0.99, 0.05, 0.0]),
-        (11, [0.98, 0.06, 0.0]),
-        (20, [0.05, 0.99, 0.0]),
-        (30, [0.6, 0.0, 0.8]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {
-        r["vec_id"]: (r["cid"], r["kept"])
-        for r in similarity.semantic_dedup(
-            emb, threshold=0.95, n_centroids=2
-        ).collect()
-    }
-    assert out[0] == (0, True) and out[1] == (1, True)
-    assert out[10] == (0, False) and out[11] == (0, False)
-    assert out[20] == (1, False)
-    assert out[30][1] is True
-
-
-def test_semantic_dedup_list_guard(spark):
-    from cs3103_gocrawler_spark.operators import similarity
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    with pytest.raises(ValueError, match="max_list_size"):
-        similarity.semantic_dedup(emb, n_centroids=2, max_list_size=10)
 
 
 # --------------------------------------------------------------------------

@@ -191,17 +191,6 @@ def test_payload_columns_never_shuffle(spark, tiny_web):
         assert "bytes" not in header, plan
 
 
-def test_embedding_neardup_lsh_no_cross_join(spark):
-    """The LSH near-dup path must join on buckets — never a cartesian or
-    nested-loop cross of the corpus (that is exactly what it replaces)."""
-    from cs3103_gocrawler_spark.operators.similarity import embedding_neardup_lsh
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    plan = _plan(embedding_neardup_lsh(emb, threshold=0.3))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 def test_phash_neardup_no_cross_join(spark, tiny_web):
     from cs3103_gocrawler_spark.operators.dedup import phash_neardup_pairs
 
@@ -235,15 +224,13 @@ _FP_KEYS = (
 # Python-eval nodes is exactly what this gate exists to catch)
 PLAN_FINGERPRINTS = {
     "broadcast_dim_join": {"BroadcastHashJoin": 1, "Exchange": 1, "HashAggregate": 2},
-    # one rank window: Catalyst's Partial/Final WindowGroupLimit pair is the
-    # skew guard
-    "cosine_topk": {"BroadcastNestedLoopJoin": 1, "Exchange": 1, "Sort": 2,
-                    "Window": 1, "WindowGroupLimit": 2},
     "dedup_minhash_lsh": {"BroadcastHashJoin": 1, "Exchange": 2, "Generate": 4,
                           "HashAggregate": 6},
     "edge_explode_tokens": {"Exchange": 1, "Generate": 1, "HashAggregate": 2},
     "event_window_agg": {"Exchange": 1, "HashAggregate": 2},
     "host_aggregate": {"Exchange": 2, "ObjectHashAggregate": 4},
+    # one rank window: Catalyst's Partial/Final WindowGroupLimit pair is the
+    # skew guard
     "politeness_rank_dequeue": {"Exchange": 1, "Sort": 2, "Window": 1,
                                 "WindowGroupLimit": 2},
     # pure narrow projection: NO shuffle, NO Python eval, NO aggregate —
@@ -264,10 +251,6 @@ PLAN_FINGERPRINTS = {
     # per-key-count relation only, never the raw rows
     "host_skew_stats": {"BroadcastNestedLoopJoin": 1, "Exchange": 4,
                         "HashAggregate": 8, "Sort": 1, "Window": 1},
-    # T35: the 1 SortMergeJoin is the cid-co-partitioned inverted-list
-    # pairing — no CartesianProduct / BroadcastNestedLoopJoin may appear
-    "semantic_dedup": {"BroadcastHashJoin": 1, "Exchange": 2,
-                       "HashAggregate": 2, "Sort": 2, "SortMergeJoin": 1},
     # T36: band explode pushes through the 2-branch union (4 Generates =
     # 2 sides x 2 branches, each branch scanned once); gates are row-local
     # (no extra Exchange beyond the banded join + drop-list anti-join)

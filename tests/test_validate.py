@@ -129,57 +129,3 @@ def test_engine_validation_table(spark, tiny_web, tmp_path):
     vis = eng.visited_df().toPandas()
     assert set(val["url"]) == set(vis["url"])
     assert val["valid"].all()
-
-
-def test_psnr_verify_pairs_confirms_and_refutes(spark):
-    """T33: exact copy -> is_dup with NULL (inf) psnr; light noise -> high
-    finite PSNR, confirmed; heavy difference -> refuted; size mismatch ->
-    refuted with NULL psnr."""
-    import numpy as np
-    import pandas as pd
-
-    from cs3103_gocrawler_spark.operators.validate import psnr_verify_pairs
-    from cs3103_gocrawler_spark.synthetic.imagecodec import encode_png, psnr
-
-    rng = np.random.default_rng(7)
-    base = rng.integers(0, 256, (32, 32, 3), dtype=np.uint8)
-    noisy = base.copy()
-    noisy[0, 0, 0] ^= 1  # single-bit pixel change: PSNR way above 40 dB
-    other = rng.integers(0, 256, (32, 32, 3), dtype=np.uint8)
-    small = base[:16, :16]
-    imgs = spark.createDataFrame(pd.DataFrame([
-        {"image_id": "base", "bytes": encode_png(base), "fmt": "png"},
-        {"image_id": "copy", "bytes": encode_png(base), "fmt": "png"},
-        {"image_id": "noisy", "bytes": encode_png(noisy), "fmt": "png"},
-        {"image_id": "other", "bytes": encode_png(other), "fmt": "png"},
-        {"image_id": "small", "bytes": encode_png(small), "fmt": "png"},
-    ]))
-    pairs = spark.createDataFrame(pd.DataFrame([
-        {"id_a": "base", "id_b": "copy"},
-        {"id_a": "base", "id_b": "noisy"},
-        {"id_a": "base", "id_b": "other"},
-        {"id_a": "base", "id_b": "small"},
-    ]))
-    got = psnr_verify_pairs(imgs, pairs).toPandas().set_index("id_b")
-    assert bool(got.loc["copy", "is_dup"]) and pd.isna(got.loc["copy", "psnr_db"])
-    assert bool(got.loc["noisy", "is_dup"])
-    assert abs(got.loc["noisy", "psnr_db"] - round(psnr(base, noisy), 6)) < 1e-9
-    assert not bool(got.loc["other", "is_dup"])
-    assert got.loc["other", "psnr_db"] < 40.0
-    assert not bool(got.loc["small", "is_dup"]) and pd.isna(got.loc["small", "psnr_db"])
-
-
-def test_psnr_verify_on_banded_candidates(spark, tiny_web):
-    """Composed image-dedup path: phash bands -> candidates -> pixel verify.
-    The synthetic web's per-page images are all distinct, so any banded
-    candidate must be REFUTED by pixels - no false dups survive."""
-    from cs3103_gocrawler_spark.operators.dedup import phash_neardup_pairs
-    from cs3103_gocrawler_spark.operators.validate import psnr_verify_pairs
-
-    _cfg, web_dir = tiny_web
-    pages = spark.read.parquet(f"{web_dir}/pages.parquet")
-    cand = phash_neardup_pairs(pages, max_hamming=16).select(
-        F.col("id_a"), F.col("id_b")
-    )
-    verified = psnr_verify_pairs(pages, cand).toPandas()
-    assert not verified["is_dup"].any()
